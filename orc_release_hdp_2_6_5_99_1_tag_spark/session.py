@@ -73,18 +73,15 @@ def get_spark(app_name: str = "orc-hdp-spark-engine") -> SparkSession:
         # local-mode only (cluster deployments size executors/driver
         # themselves): the JVM defaults to a 1 GiB heap, which a
         # 32-thread local run exhausts long before machine memory —
-        # broadcast builds were observed to OOM at ~100k-doc corpora
+        # broadcast builds were observed to OOM at ~100k-doc corpora.
+        # The setting is a cap only: the heap is not pre-committed
+        # (no -Xms), so G1 grows it to the live set. With -Xms equal to
+        # the cap, G1 used the whole cap as young and old space and
+        # touched nearly all of it before collecting, which raised the
+        # driver's resident memory and saved no time (paired runs of
+        # perfbench/run.py, per-run figures in PERF_heap_ab.json).
         builder = builder.config(
             "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-        )
-        # Commit the heap up front (-Xms = -Xmx): G1 otherwise starts at
-        # a 2 GiB committed size and runs hundreds of young/concurrent
-        # cycles while it decides to grow — measured 452 young + 164
-        # concurrent cycles in the first 10 minutes of a bench session.
-        # Cluster deployments size executor JVMs themselves.
-        builder = builder.config(
-            "spark.driver.extraJavaOptions",
-            "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
     return builder.getOrCreate()
 

@@ -1272,7 +1272,7 @@ def r12_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(120)
+            _await(q, 120)
         write_marker(base + "._fp", fp)
     return (
         spark.read.schema("id bigint, bucket int, amount bigint")

@@ -18,10 +18,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from orc_release_hdp_2_6_5_99_1_tag_spark.streaming.ingest import (
+    _await,
     _events_stream,
     _state_sized_shuffle,
 )
-from orc_release_hdp_2_6_5_99_1_tag_spark.tables import scratch_dir
 
 _OUT_SCHEMA = "user_id bigint, n_events bigint, total_value_milli bigint"
 _STATE_SCHEMA = "n bigint, v bigint"
@@ -53,7 +53,6 @@ def r3_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful per-user running totals; returns the final state per
     user (last emitted row per key), which must equal the batch
     aggregate."""
-    base = scratch_dir(sf_dir)
     name = "r3_state_" + os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     stream = _events_stream(spark, sf_dir).select("user_id", "value")
     result = stream.groupBy("user_id").applyInPandasWithState(
@@ -76,7 +75,7 @@ def r3_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await(q, 300)
     # update mode appends one row per key per batch: keep the final row
     latest = spark.table(name).groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
@@ -192,7 +191,7 @@ def r9_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await(q, 300)
     finally:
         if saved is None:
             spark.conf.unset(conf_key)

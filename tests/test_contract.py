@@ -26,6 +26,20 @@ def _all_oracles():
     return {**catalog.oracle_sql(), **catalog.extra_oracle_sql()}
 
 
+def test_readme_registry_counts_match_catalog():
+    """README states the registry size; keep it equal to the catalog."""
+    import os
+    import re
+
+    with open(os.path.join(os.path.dirname(os.path.dirname(__file__)), "README.md")) as fh:
+        m = re.search(
+            r"\((\d+) oracle-checked queries: (\d+) driver-graded \+ (\d+) pytest-only",
+            fh.read(),
+        )
+    graded, extras = len(catalog.queries()), len(catalog.extra_queries())
+    assert m and tuple(map(int, m.groups())) == (graded + extras, graded, extras)
+
+
 def test_graded_window_not_exceeded():
     """The driver grades only the first GRADED_WINDOW registrations —
     anything beyond gets no correctness verdict (round-1 lesson)."""

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path):
@@ -426,3 +427,27 @@ def test_r11_cold_shape_stays_amortized(spark, sf_dir):
     assert state_parts == _R11_STATE_PARTITIONS, (
         f"state partitions {state_parts} != pinned {_R11_STATE_PARTITIONS}"
     )
+
+
+def test_unterminated_drain_raises_and_leaves_no_marker(spark, sf_dir, tmp_path, monkeypatch):
+    """A drain whose awaitTermination times out (returns False instead
+    of raising) must fail loudly: the query is stopped, the call raises,
+    and a sink with a completion marker (r12) is left unmarked so the
+    next call rebuilds it instead of serving a partial sink."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.pyds import SYNTH_BATCH, SYNTH_N
+    from orc_release_hdp_2_6_5_99_1_tag_spark.streaming import ingest, stateful
+    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import marker_valid
+
+    monkeypatch.setattr(ingest, "scratch_dir", lambda _sf: str(tmp_path))
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
+
+    with pytest.raises(RuntimeError, match="did not terminate"):
+        ingest.r12_python_stream_source(spark, sf_dir)
+    marker = os.path.join(str(tmp_path), "stream", "pyds_source._fp")
+    assert not marker_valid(marker, f"synthetic_events;n={SYNTH_N};batch={SYNTH_BATCH}")
+
+    with pytest.raises(RuntimeError, match="did not terminate"):
+        stateful.r3_stateful_running_totals(spark, sf_dir)
+    assert not spark.streams.active
