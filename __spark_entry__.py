@@ -11,12 +11,13 @@ module only adapts it to the driver contract.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from orc_release_hdp_2_6_5_99_1_tag_spark import catalog
 

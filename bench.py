@@ -400,13 +400,11 @@ def main() -> None:
     # scan and would hide regressions in the streaming layer itself)
     import shutil
 
-    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import scratch_dir
+    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import scratch_dir, unstage
 
     streaming_names = {n for n in EXTENDED if n.startswith("r")}
     shutil.rmtree(os.path.join(scratch_dir(SF_DIR), "stream"), ignore_errors=True)
-    shutil.rmtree(
-        os.path.join(scratch_dir(SF_DIR), "acid", "users_cdc"), ignore_errors=True
-    )
+    unstage(os.path.join(scratch_dir(SF_DIR), "acid", "users_cdc"))
     extended: dict[str, float] = {}
     # r09 (round-8 verdict): the topic staging SHARED by the r* tier is
     # built and timed as its own line, so each r* line is steady-state

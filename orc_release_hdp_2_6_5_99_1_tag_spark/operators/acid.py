@@ -30,7 +30,6 @@ Demo dataset is built deterministically from `orders`:
 from __future__ import annotations
 
 import os
-import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -38,10 +37,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import read_orc, write_orc
 from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
     load_table,
-    marker_valid,
     scratch_dir,
     source_fingerprint,
-    write_marker,
+    staged,
 )
 
 OP_INSERT, OP_UPDATE, OP_DELETE = 0, 1, 2
@@ -86,39 +84,37 @@ def _acid_event(df: DataFrame, operation: int, txn: int) -> DataFrame:
 def acid_table_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the base + delta directory layout once per sf."""
     root = os.path.join(scratch_dir(sf_dir), "acid", "orders_acid")
-    fp = source_fingerprint(sf_dir, "orders")
-    if marker_valid(os.path.join(root, "_done"), fp):
-        return root
-    shutil.rmtree(root, ignore_errors=True)
-    o = load_table(spark, sf_dir, "orders")
-    base = _acid_event(o, OP_INSERT, txn=1)
-    updated = o.filter(F.col("o_orderkey") % 10 == 0).select(
-        "o_orderkey",
-        F.lit("U").alias("o_orderstatus"),
-        (F.col("o_totalprice").cast("decimal(18,2)") + F.lit(100.00).cast("decimal(18,2)"))
-        .cast("double")
-        .alias("o_totalprice"),
-    )
-    delta2 = _acid_event(updated, OP_UPDATE, txn=2)
-    deleted = o.filter(F.col("o_orderkey") % 100 == 0)
-    delta3 = _acid_event(deleted, OP_DELETE, txn=3)
-    # ACID key order within files (acid.md:69: events sorted by
-    # (originalTransaction, bucket, rowId) enables streaming merge)
-    for df, sub in [
-        (base, "base_0000001"),
-        (delta2, "delta_0000002_0000002"),
-        (delta3, "delta_0000003_0000003"),
-    ]:
-        write_orc(
-            _to_physical(
-                df.repartition(_N_BUCKETS, "bucket").sortWithinPartitions(
-                    "originalTransaction", "bucket", "rowId"
-                )
-            ),
-            os.path.join(root, sub),
+
+    def build():
+        o = load_table(spark, sf_dir, "orders")
+        base = _acid_event(o, OP_INSERT, txn=1)
+        updated = o.filter(F.col("o_orderkey") % 10 == 0).select(
+            "o_orderkey",
+            F.lit("U").alias("o_orderstatus"),
+            (F.col("o_totalprice").cast("decimal(18,2)") + F.lit(100.00).cast("decimal(18,2)"))
+            .cast("double")
+            .alias("o_totalprice"),
         )
-    write_marker(os.path.join(root, "_done"), fp)
-    return root
+        delta2 = _acid_event(updated, OP_UPDATE, txn=2)
+        deleted = o.filter(F.col("o_orderkey") % 100 == 0)
+        delta3 = _acid_event(deleted, OP_DELETE, txn=3)
+        # ACID key order within files (acid.md:69: events sorted by
+        # (originalTransaction, bucket, rowId) enables streaming merge)
+        for df, sub in [
+            (base, "base_0000001"),
+            (delta2, "delta_0000002_0000002"),
+            (delta3, "delta_0000003_0000003"),
+        ]:
+            write_orc(
+                _to_physical(
+                    df.repartition(_N_BUCKETS, "bucket").sortWithinPartitions(
+                        "originalTransaction", "bucket", "rowId"
+                    )
+                ),
+                os.path.join(root, sub),
+            )
+
+    return staged(root, source_fingerprint(sf_dir, "orders"), build)
 
 
 def _union_events(parts: list) -> DataFrame:
@@ -276,8 +272,8 @@ def t3_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost afterwards — reference `acid.md:45-62`)."""
     root = acid_table_dir(spark, sf_dir)
     compacted = os.path.join(scratch_dir(sf_dir), "acid", "orders_compacted")
-    fp = source_fingerprint(sf_dir, "orders")
-    if not marker_valid(compacted + "._fp", fp):
+
+    def build():
         base = merged_view(spark, root).select(
             F.lit(OP_INSERT).alias("operation"),
             F.lit(1).cast("bigint").alias("originalTransaction"),
@@ -296,7 +292,8 @@ def t3_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             compacted,
         )
-        write_marker(compacted + "._fp", fp)
+
+    staged(compacted, source_fingerprint(sf_dir, "orders"), build)
     out = _read_events(spark, compacted)
     return out.select("row.id", "row.status", "row.totalprice", "bucket", "currentTransaction").orderBy(
         "id"
@@ -313,9 +310,8 @@ def t5_minor_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     base + combined delta must equal the original three-dir view."""
     root = acid_table_dir(spark, sf_dir)
     minor_root = os.path.join(scratch_dir(sf_dir), "acid", "orders_minor")
-    fp = source_fingerprint(sf_dir, "orders")
-    if not marker_valid(os.path.join(minor_root, "_done"), fp):
-        shutil.rmtree(minor_root, ignore_errors=True)
+
+    def build():
         os.makedirs(minor_root, exist_ok=True)
         deltas = [
             _read_events(spark, os.path.join(root, d))
@@ -342,10 +338,11 @@ def t5_minor_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(minor_root, "delta_0000002_0000003"),
         )
         # base is shared (not rewritten) — link it into the minor layout
-        base_link = os.path.join(minor_root, "base_0000001")
-        if not os.path.exists(base_link):
-            os.symlink(os.path.join(root, "base_0000001"), base_link)
-        write_marker(os.path.join(minor_root, "_done"), fp)
+        os.symlink(
+            os.path.join(root, "base_0000001"), os.path.join(minor_root, "base_0000001")
+        )
+
+    staged(minor_root, source_fingerprint(sf_dir, "orders"), build)
     return merged_view(spark, minor_root).orderBy("id")
 
 
@@ -392,62 +389,60 @@ def original_files_dir(spark: SparkSession, sf_dir: str) -> str:
     contract. txn 4 updates o_orderkey%7==0 (status→'V',
     totalprice+50); txn 5 deletes o_orderkey%50==0."""
     root = os.path.join(scratch_dir(sf_dir), "acid", "orders_original")
-    fp = source_fingerprint(sf_dir, "orders")
-    if marker_valid(os.path.join(root, "_done"), fp):
-        return root
-    shutil.rmtree(root, ignore_errors=True)
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    bucket = (F.col("o_orderkey") % _N_BUCKETS).cast("int")
-    plain = o.withColumn("bucket", bucket)
-    write_orc(
-        plain.repartitionByRange(_N_BUCKETS, "bucket").sortWithinPartitions(
-            "bucket", "o_orderkey"
-        ),
-        os.path.join(root, "original"),
-    )
-    w_row = Window.partitionBy("bucket").orderBy("o_orderkey")
-    keyed = plain.withColumn("rowId", F.row_number().over(w_row).cast("bigint") - 1)
 
-    def event(df: DataFrame, operation: int, txn: int) -> DataFrame:
-        return df.select(
-            F.lit(operation).alias("operation"),
-            F.lit(0).cast("bigint").alias("originalTransaction"),
-            "bucket",
-            "rowId",
-            F.lit(txn).cast("bigint").alias("currentTransaction"),
-            F.struct(
-                F.col("o_orderkey").alias("id"),
-                F.col("o_orderstatus").alias("status"),
-                F.col("o_totalprice").alias("totalprice"),
-            ).alias("row"),
+    def build():
+        o = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
         )
-
-    updated = keyed.filter(F.col("o_orderkey") % 7 == 0).withColumns(
-        {
-            "o_orderstatus": F.lit("V"),
-            "o_totalprice": (
-                F.col("o_totalprice").cast("decimal(18,2)")
-                + F.lit(50.00).cast("decimal(18,2)")
-            ).cast("double"),
-        }
-    )
-    deleted = keyed.filter(F.col("o_orderkey") % 50 == 0)
-    for df, sub in [
-        (event(updated, OP_UPDATE, 4), "delta_0000004_0000004"),
-        (event(deleted, OP_DELETE, 5), "delta_0000005_0000005"),
-    ]:
+        bucket = (F.col("o_orderkey") % _N_BUCKETS).cast("int")
+        plain = o.withColumn("bucket", bucket)
         write_orc(
-            _to_physical(
-                df.repartitionByRange(_N_BUCKETS, "bucket").sortWithinPartitions(
-                    "originalTransaction", "bucket", "rowId"
-                )
+            plain.repartitionByRange(_N_BUCKETS, "bucket").sortWithinPartitions(
+                "bucket", "o_orderkey"
             ),
-            os.path.join(root, sub),
+            os.path.join(root, "original"),
         )
-    write_marker(os.path.join(root, "_done"), fp)
-    return root
+        w_row = Window.partitionBy("bucket").orderBy("o_orderkey")
+        keyed = plain.withColumn("rowId", F.row_number().over(w_row).cast("bigint") - 1)
+
+        def event(df: DataFrame, operation: int, txn: int) -> DataFrame:
+            return df.select(
+                F.lit(operation).alias("operation"),
+                F.lit(0).cast("bigint").alias("originalTransaction"),
+                "bucket",
+                "rowId",
+                F.lit(txn).cast("bigint").alias("currentTransaction"),
+                F.struct(
+                    F.col("o_orderkey").alias("id"),
+                    F.col("o_orderstatus").alias("status"),
+                    F.col("o_totalprice").alias("totalprice"),
+                ).alias("row"),
+            )
+
+        updated = keyed.filter(F.col("o_orderkey") % 7 == 0).withColumns(
+            {
+                "o_orderstatus": F.lit("V"),
+                "o_totalprice": (
+                    F.col("o_totalprice").cast("decimal(18,2)")
+                    + F.lit(50.00).cast("decimal(18,2)")
+                ).cast("double"),
+            }
+        )
+        deleted = keyed.filter(F.col("o_orderkey") % 50 == 0)
+        for df, sub in [
+            (event(updated, OP_UPDATE, 4), "delta_0000004_0000004"),
+            (event(deleted, OP_DELETE, 5), "delta_0000005_0000005"),
+        ]:
+            write_orc(
+                _to_physical(
+                    df.repartitionByRange(_N_BUCKETS, "bucket").sortWithinPartitions(
+                        "originalTransaction", "bucket", "rowId"
+                    )
+                ),
+                os.path.join(root, sub),
+            )
+
+    return staged(root, source_fingerprint(sf_dir, "orders"), build)
 
 
 def t6_original_files(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -55,10 +55,6 @@ def _lit_vec_sql(vals) -> str:
     return "array(" + ",".join(repr(float(x)) + "D" for x in vals) + ")"
 
 
-def _lit_vec(vals) -> F.Column:
-    return F.expr(_lit_vec_sql(vals))
-
-
 def _sq_dist_sql(v_sql: str, vals) -> str:
     """SQL text for the squared L2 between an array-typed expression
     and a literal centroid, summed in list order (argmin-equivalent to
@@ -66,15 +62,6 @@ def _sq_dist_sql(v_sql: str, vals) -> str:
     return (
         f"aggregate(zip_with({v_sql}, {_lit_vec_sql(vals)}, "
         "(x, c) -> (x - c) * (x - c)), 0.0D, (acc, d) -> acc + d)"
-    )
-
-
-def _sq_dist(v: F.Column, lit_vec: F.Column) -> F.Column:
-    """Column twin of `_sq_dist_sql` for non-literal operands."""
-    return F.aggregate(
-        F.zip_with(v, lit_vec, lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
     )
 
 
@@ -213,37 +200,3 @@ SELECT a.vec_id, CAST(a.cluster AS INT) AS cluster,
        CAST(COUNT(*) OVER (PARTITION BY a.cluster) AS BIGINT) AS cluster_size
 FROM a3 a ORDER BY a.vec_id
 """
-
-
-def assign_bulk(e: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment for LARGE k — centroids as a
-    broadcast TABLE (cid, c) instead of literal expressions. The
-    literal-argmin path (`_assign`) codegen's k distance expressions
-    per row, which is the fastest shape for model-sized k (≤ a few
-    hundred) but makes Catalyst analysis itself O(k·dim) — at the
-    k ≈ corpus/1000 SemDeDup deployments need (tens of thousands of
-    clusters), the broadcast-join + min_by aggregation below is the
-    scale shape: one BroadcastNestedLoopJoin row-expansion of k per
-    vector (the irreducible n·k distance evaluations), then a
-    partial-aggregatable min_by keyed on vec_id. Tie-break matches
-    `_assign` exactly: (distance, cid) struct ordering.
-
-    Both paths produce IDENTICAL assignments (pinned by
-    tests/test_clustering.py); pick by k.
-    """
-    dist = F.aggregate(
-        F.zip_with("v", "c", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-    pairs = e.crossJoin(F.broadcast(centroids))
-    return (
-        pairs.select(
-            "vec_id",
-            "v",
-            F.struct(dist.alias("d"), F.col("cid").cast("int").alias("cid")).alias("dc"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min("dc").alias("best"), F.first("v").alias("v"))
-        .select("vec_id", "v", F.col("best.cid").alias("cluster"))
-    )

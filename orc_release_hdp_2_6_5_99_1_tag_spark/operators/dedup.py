@@ -138,12 +138,6 @@ def _minhash_agg_exprs(with_size: bool = False) -> list:
     return aggs
 
 
-def minhash_signatures(d: DataFrame) -> DataFrame:
-    """16 minhash values per doc: min over shingles of (a*h + b) % P."""
-    sh = _shingles(d)
-    return sh.groupBy("doc_id").agg(*_minhash_agg_exprs())
-
-
 def _band_buckets(sig: DataFrame) -> DataFrame:
     """Band the signature: band hash = md5 of 4 concatenated minhashes."""
     bands = []
@@ -860,10 +854,7 @@ def d11_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of thousands of clusters for billions of docs) — at constant
     cluster size the pair stage is linear in n, measured in
     `scripts/scale_stress.py::run_d11_cluster_pairs` (10× corpus →
-    ~10× wall-clock at cluster size 1000). For that large-k regime the
-    assignment itself switches from literal-argmin expressions to the
-    broadcast-table path (`clustering.assign_bulk`, pinned
-    bit-identical to `_assign` by tests/test_clustering.py). One shuffle on cluster id
+    ~10× wall-clock at cluster size 1000). One shuffle on cluster id
     for the self-join; norms computed once per row; the k-means
     rounds are k1's (one scan each).
     """

@@ -25,10 +25,9 @@ from orc_release_hdp_2_6_5_99_1_tag_spark.functions import (
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import orc_copy, read_orc, write_orc
 from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
     load_table,
-    marker_valid,
     scratch_dir,
     source_fingerprint,
-    write_marker,
+    staged,
 )
 
 
@@ -208,13 +207,14 @@ def _positional_orc(spark: SparkSession, sf_dir: str) -> str:
     so the reader must map file→reader columns BY POSITION."""
     out = os.path.join(scratch_dir(sf_dir), "orc", "lineitem_positional")
     fp = source_fingerprint(sf_dir, "lineitem")
-    if not marker_valid(out + "._fp", fp):
+
+    def build():
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"
         )
         write_orc(li.toDF("_col0", "_col1", "_col2", "_col3"), out)
-        write_marker(out + "._fp", fp)
-    return out
+
+    return staged(out, fp, build)
 
 
 def c3_positional_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,7 +273,8 @@ def u1_union_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     dest = os.path.join(scratch_dir(sf_dir), "orc", "union_demo")
     l = load_table(spark, sf_dir, "lineitem")
     fp = source_fingerprint(sf_dir, "lineitem")
-    if not marker_valid(dest + "._fp", fp):
+
+    def build():
         tag = (F.col("l_linenumber") % 2).cast("tinyint")
         u = l.select(
             "l_orderkey",
@@ -281,8 +282,8 @@ def u1_union_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             union_encode(tag, F.col("l_orderkey"), F.col("l_returnflag")).alias("u"),
         )
         write_orc(u, dest)
-        write_marker(dest + "._fp", fp)
-    df = read_orc(spark, dest)
+
+    df = read_orc(spark, staged(dest, fp, build))
     return (
         df.select(
             union_tag(F.col("u")).alias("tag"),
@@ -323,7 +324,8 @@ def t1_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     dest = os.path.join(scratch_dir(sf_dir), "orc", "nested_demo")
     l = load_table(spark, sf_dir, "lineitem")
     fp = source_fingerprint(sf_dir, "lineitem")
-    if not marker_valid(dest + "._fp", fp):
+
+    def build():
         nested = l.select(
             "l_orderkey",
             "l_linenumber",
@@ -343,8 +345,8 @@ def t1_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("middle"),
         )
         write_orc(nested, dest)
-        write_marker(dest + "._fp", fp)
-    df = read_orc(spark, dest)
+
+    df = read_orc(spark, staged(dest, fp, build))
     return df.agg(
         F.count(F.lit(1)).alias("cnt"),
         F.count("inner").alias("n_inner"),

@@ -45,8 +45,6 @@ from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table
 # shared: the co-presence edge set
 # ---------------------------------------------------------------------------
 
-_BUCKET_MINUTES = 10
-
 _EDGES_CTE = """
 b AS (
   SELECT DISTINCT user_id AS u, event_type AS et,

@@ -23,10 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import read_orc, write_orc
 from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
     load_table,
-    marker_valid,
     scratch_dir,
     source_fingerprint,
-    write_marker,
+    staged,
 )
 
 # Split point inside the testdata's January-2024 event range: rows
@@ -51,9 +50,7 @@ def mv1_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = source_fingerprint(sf_dir, "events")
     split = F.lit(_SPLIT).cast("timestamp")
     e = load_table(spark, sf_dir, "events")
-    if not marker_valid(dest + "._fp", fp):
-        write_orc(_daily_partials(e.filter(F.col("ts") < split)), dest)
-        write_marker(dest + "._fp", fp)
+    staged(dest, fp, lambda: write_orc(_daily_partials(e.filter(F.col("ts") < split)), dest))
     base = read_orc(spark, dest)
     delta = _daily_partials(e.filter(F.col("ts") >= split))
     return (
@@ -113,9 +110,7 @@ def mv2_affected_key_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = source_fingerprint(sf_dir, "events")
     split = F.lit(_SPLIT).cast("timestamp")
     e = load_table(spark, sf_dir, "events")
-    if not marker_valid(dest + "._fp", fp):
-        write_orc(_user_profile(e.filter(F.col("ts") < split)), dest)
-        write_marker(dest + "._fp", fp)
+    staged(dest, fp, lambda: write_orc(_user_profile(e.filter(F.col("ts") < split)), dest))
     view = read_orc(spark, dest)
     affected = (
         e.filter(F.col("ts") >= split).select("user_id").distinct()

@@ -26,10 +26,10 @@ from orc_release_hdp_2_6_5_99_1_tag_spark.sources.meta import orc_file_stats_fro
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import orc_copy, read_orc, write_orc
 from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
     load_table,
-    marker_valid,
     scratch_dir,
     source_fingerprint,
-    write_marker,
+    staged,
+    unstage,
 )
 
 
@@ -140,7 +140,8 @@ def s5_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition count (asserted in tests)."""
     dest = os.path.join(scratch_dir(sf_dir), "orc", "orders_by_status")
     fp = source_fingerprint(sf_dir, "orders")
-    if not marker_valid(dest + "._fp", fp):
+
+    def build():
         o = load_table(spark, sf_dir, "orders")
         (
             o.repartition("o_orderstatus")
@@ -149,7 +150,8 @@ def s5_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("o_orderstatus")
             .orc(dest)
         )
-        write_marker(dest + "._fp", fp)
+
+    staged(dest, fp, build)
     df = spark.read.orc(dest).filter(F.col("o_orderstatus") == "F")
     return df.agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -173,7 +175,8 @@ def s9_json_to_orc_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     json_dir = os.path.join(base, "json", "events")
     orc_dir = os.path.join(base, "orc", "events_from_json")
     fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(orc_dir + "._fp", fp):
+
+    def build():
         e = load_table(spark, sf_dir, "events").select(
             "event_id",
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
@@ -188,7 +191,8 @@ def s9_json_to_orc_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
             " value double, props string"
         ).json(json_dir)
         write_orc(j.withColumn("ts", F.to_timestamp("ts")), orc_dir)
-        write_marker(orc_dir + "._fp", fp)
+
+    staged(orc_dir, fp, build)
     df = read_orc(spark, orc_dir)
     return (
         df.groupBy("event_type")
@@ -219,7 +223,8 @@ def s10_json_schema_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scratch_dir(sf_dir)
     json_dir = os.path.join(base, "json", "mixed_schema")
     fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(os.path.join(json_dir, "_done"), fp):
+
+    def build():
         e = load_table(spark, sf_dir, "events")
         a = e.limit(200).select(
             "event_id", F.col("value").cast("long").alias("value"), "event_type"
@@ -229,7 +234,8 @@ def s10_json_schema_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         a.write.mode("overwrite").json(os.path.join(json_dir, "a"))
         b.write.mode("overwrite").json(os.path.join(json_dir, "b"))
-        write_marker(os.path.join(json_dir, "_done"), fp)
+
+    staged(json_dir, fp, build)
     inferred = spark.read.json([os.path.join(json_dir, "a"), os.path.join(json_dir, "b")])
     fields = [(f.name, f.dataType.simpleString()) for f in inferred.schema.fields]
     return spark.createDataFrame(sorted(fields), "field string, inferred_type string")
@@ -257,11 +263,13 @@ def s13_corrupt_file_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scratch_dir(sf_dir)
     dest = os.path.join(base, "orc", "nation_with_corrupt")
     fp = source_fingerprint(sf_dir, "nation")
-    if not marker_valid(dest + "._fp", fp):
+
+    def build():
         write_orc(load_table(spark, sf_dir, "nation"), dest)
         with open(os.path.join(dest, "part-corrupt.orc"), "wb") as fh:
             fh.write(b"ORC\x00this is not a real orc file" * 64)
-        write_marker(dest + "._fp", fp)
+
+    staged(dest, fp, build)
     prev = spark.conf.get("spark.sql.files.ignoreCorruptFiles", "false")
     spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
     try:
@@ -293,9 +301,11 @@ def s11_orc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a full count."""
     dest = os.path.join(scratch_dir(sf_dir), "orc", "lineitem_meta4")
     fp = source_fingerprint(sf_dir, "lineitem")
-    if not marker_valid(dest + "._fp", fp):
+
+    def build():
         write_orc(load_table(spark, sf_dir, "lineitem").repartition(4), dest)
-        write_marker(dest + "._fp", fp)
+
+    staged(dest, fp, build)
     return orc_file_stats_from_footer(spark, dest)
 
 
@@ -378,7 +388,8 @@ def s14_csv_to_orc_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit('flag="'), F.col("l_returnflag"), F.lit('", status='),
         F.col("l_linestatus"), F.lit(", qty,"), qty.cast("string"),
     )
-    if not marker_valid(orc_dir + "._fp", fp):
+
+    def build():
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_linenumber", qty.alias("l_quantity"),
             F.col("l_extendedprice").cast("decimal(15,2)").alias("l_extendedprice"),
@@ -404,7 +415,8 @@ def s14_csv_to_orc_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .csv(csv_dir)
         )
         write_orc(c, orc_dir)
-        write_marker(orc_dir + "._fp", fp)
+
+    staged(orc_dir, fp, build)
     df = read_orc(spark, orc_dir)
     return (
         df.groupBy("l_returnflag")
@@ -461,11 +473,13 @@ def s15_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     frag_dir = os.path.join(base, "orc", "lineitem_fragmented")
     comp_dir = os.path.join(base, "orc", "lineitem_compacted")
     fp = source_fingerprint(sf_dir, "lineitem")
-    if not marker_valid(comp_dir + "._fp", fp):
+
+    def build():
         li = load_table(spark, sf_dir, "lineitem")
         write_orc(li.repartition(_S15_FRAGMENTS), frag_dir)
         write_orc(read_orc(spark, frag_dir).repartition(_S15_TARGET), comp_dir)
-        write_marker(comp_dir + "._fp", fp)
+
+    staged(comp_dir, fp, build)
     n_before = len([f for f in os.listdir(frag_dir) if f.startswith("part")])
     n_after = len([f for f in os.listdir(comp_dir) if f.startswith("part")])
     return (
@@ -499,7 +513,6 @@ _Z_BITS = 16            # per-dimension resolution (scaled to 0..65535)
 _Z_SPACE = 1 << _Z_BITS
 _Z_BUCKET_SHIFT = 2 * _Z_BITS - 6   # keep top 6 interleaved bits -> 64 buckets
 _S_BUCKET_SHIFT = _Z_BITS - 6       # single-key layout: top 6 bits of x
-_Z_BUCKETS = 64
 
 
 def _morton_sql(xc: str, yc: str) -> str:
@@ -649,7 +662,6 @@ def _bucketed_table(spark: SparkSession, sf_dir: str, table: str, key: str) -> s
     time. (The catalog entry is per-session; the data files are
     shared, and a fresh session re-registers over the same path.)"""
     import re
-    import shutil
 
     tag = re.sub(r"[^0-9a-zA-Z]+", "_", os.path.basename(os.path.normpath(sf_dir)))
     name = f"bkt_{table}_{tag}"
@@ -660,12 +672,28 @@ def _bucketed_table(spark: SparkSession, sf_dir: str, table: str, key: str) -> s
     # new one — a sort-merge join would silently read wrongly-bucketed
     # files and return wrong results (round-7 ADVICE).
     fp = source_fingerprint(sf_dir, table) + f";buckets={_S17_BUCKETS};key={key}"
+
+    def build():
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        (
+            load_table(spark, sf_dir, table)
+            .write.format("parquet")
+            .bucketBy(_S17_BUCKETS, key)
+            .sortBy(key)
+            .option("path", path)
+            .mode("overwrite")
+            .saveAsTable(name)
+        )
+
     has_data = os.path.isdir(path) and any(
         f.endswith(".parquet") for f in os.listdir(path)
     )
-    if marker_valid(path + "._fp", fp) and has_data:
-        if spark.catalog.tableExists(name):
-            return name
+    if not has_data:
+        # fault check: a marker that outlived its data files must not
+        # register an empty table
+        unstage(path)
+    staged(path, fp, build)
+    if not spark.catalog.tableExists(name):
         # Data files are valid but the in-memory catalog (per-session)
         # lost the entry — a fresh session must NOT pay the clustering
         # shuffle again. Re-register the existing bucketed files:
@@ -681,19 +709,6 @@ def _bucketed_table(spark: SparkSession, sf_dir: str, table: str, key: str) -> s
             f"CLUSTERED BY ({key}) SORTED BY ({key}) "
             f"INTO {_S17_BUCKETS} BUCKETS LOCATION '{path}'"
         )
-        return name
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(path, ignore_errors=True)
-    (
-        load_table(spark, sf_dir, table)
-        .write.format("parquet")
-        .bucketBy(_S17_BUCKETS, key)
-        .sortBy(key)
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(name)
-    )
-    write_marker(path + "._fp", fp)
     return name
 
 
@@ -756,13 +771,14 @@ def _s18_partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
     directories static (s5) and dynamic (s18) pruning eliminate."""
     out = os.path.join(scratch_dir(sf_dir), "parquet", "orders_by_month")
     fp = source_fingerprint(sf_dir, "orders")
-    if not marker_valid(out + "._fp", fp):
+
+    def build():
         o = load_table(spark, sf_dir, "orders").withColumn(
             "o_month", F.month("o_orderdate")
         )
         o.write.mode("overwrite").partitionBy("o_month").parquet(out)
-        write_marker(out + "._fp", fp)
-    return out
+
+    return staged(out, fp, build)
 
 
 def _s18_month_dim(spark: SparkSession, sf_dir: str) -> str:
@@ -863,7 +879,8 @@ def s19_rowgroup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = source_fingerprint(sf_dir, "lineitem") + (
         f";stride={_S19_STRIDE};cols=l_orderkey,l_linenumber,l_quantity,l_returnflag"
     )
-    if not marker_valid(dest + "._fp", fp):
+
+    def build():
         df = (
             load_table(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
@@ -871,7 +888,8 @@ def s19_rowgroup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .sortWithinPartitions("l_orderkey", "l_linenumber")
         )
         write_orc(df, dest, row_index_stride=_S19_STRIDE, stripe_size=256 * 1024 * 1024)
-        write_marker(dest + "._fp", fp)
+
+    staged(dest, fp, build)
     rg = rowgroup_stats(spark, dest, ["l_orderkey", "l_returnflag"]).cache()
     misaligned = rg.filter((F.col("start_row") % _S19_STRIDE) != 0).count()
     if misaligned:
@@ -948,7 +966,8 @@ def s20_xml_to_orc_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit('bal<'), bal.cast("string"), F.lit('>&"'), F.col("c_name"),
         F.lit("'"),
     )
-    if not marker_valid(orc_dir + "._fp", fp):
+
+    def build():
         c = load_table(spark, sf_dir, "customer").select(
             "c_custkey",
             F.col("c_nationkey").cast("int").alias("c_nationkey"),
@@ -982,7 +1001,8 @@ def s20_xml_to_orc_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .load(xml_dir)
         )
         write_orc(x, orc_dir)
-        write_marker(orc_dir + "._fp", fp)
+
+    staged(orc_dir, fp, build)
     df = read_orc(spark, orc_dir)
     return (
         df.groupBy("c_mktsegment")
@@ -1032,14 +1052,16 @@ def s21_python_datasource_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = source_fingerprint(sf_dir, "orders") + (
         ";files=4;cols=o_orderkey,o_totalprice,o_orderstatus"
     )
-    if not marker_valid(dest + "._fp", fp):
+
+    def build():
         df = (
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
             .repartition(4, F.col("o_orderkey"))
         )
         write_orc(df, dest, stripe_size=256 * 1024 * 1024)
-        write_marker(dest + "._fp", fp)
+
+    staged(dest, fp, build)
     meta = (
         spark.read.format("orc_meta")
         .option("path", dest)
@@ -1121,7 +1143,8 @@ def s22_partial_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = source_fingerprint(sf_dir, "lineitem") + (
         f";stride={_S22_STRIDE};stripe=1m;cols={','.join(cols)}"
     )
-    if not marker_valid(dest + "._fp", fp):
+
+    def build():
         df = (
             load_table(spark, sf_dir, "lineitem")
             .select(*cols)
@@ -1131,7 +1154,8 @@ def s22_partial_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_orc(
             df, dest, row_index_stride=_S22_STRIDE, stripe_size=1024 * 1024
         )
-        write_marker(dest + "._fp", fp)
+
+    staged(dest, fp, build)
     import glob
 
     files = sorted(glob.glob(os.path.join(dest, "*.orc")))
@@ -1205,7 +1229,8 @@ def s23_bounded_tail_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = grown + ".flush_length"
     prefix_dir = os.path.join(base, "orc", "orders_durable_prefix")
     fp = source_fingerprint(sf_dir, "orders") + f";cap={_S23_KEY_CAP};suffix=half"
-    if not marker_valid(grown_dir + "._fp", fp):
+
+    def build_growing():
         import glob
         import shutil
 
@@ -1230,16 +1255,19 @@ def s23_bounded_tail_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(side, "w") as fh:
             fh.write(str(durable))
         shutil.rmtree(tmp, ignore_errors=True)
-        write_marker(grown_dir + "._fp", fp)
+
+    staged(grown_dir, fp, build_growing)
     durable = int(open(side).read())
     meta = parse_tail_of_file(grown, max_file_length=durable)
-    if not marker_valid(prefix_dir + "._fp", fp):
+
+    def build_prefix():
         os.makedirs(prefix_dir, exist_ok=True)
         with open(grown, "rb") as f_in, open(
             os.path.join(prefix_dir, "part-00000.orc"), "wb"
         ) as f_out:
             f_out.write(f_in.read(durable))
-        write_marker(prefix_dir + "._fp", fp)
+
+    staged(prefix_dir, fp, build_prefix)
     return (
         read_orc(spark, prefix_dir)
         .groupBy("o_orderstatus")
@@ -1309,7 +1337,8 @@ def s24_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = source_fingerprint(sf_dir, "lineitem") + (
         f";files={_S24_FILES};stride=1000;chunk=4k;cols={','.join(cols)}"
     )
-    if not marker_valid(dest + "._fp", fp):
+
+    def build():
         df = (
             load_table(spark, sf_dir, "lineitem")
             .select(*cols)
@@ -1320,7 +1349,8 @@ def s24_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             df, dest, row_index_stride=1000, compress_size=4096,
             stripe_size=1024 * 1024,
         )
-        write_marker(dest + "._fp", fp)
+
+    staged(dest, fp, build)
     import glob
 
     files = sorted(glob.glob(os.path.join(dest, "*.orc")))
@@ -1381,7 +1411,8 @@ def s25_orc_native_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dest = os.path.join(scratch_dir(sf_dir), "orc", "orders_native_nested")
     fp = source_fingerprint(sf_dir, "orders") + ";stride=1000;files=4;nested=v2"
-    if not marker_valid(dest + "._fp", fp):
+
+    def build():
         df = (
             load_table(spark, sf_dir, "orders")
             .select(
@@ -1404,7 +1435,8 @@ def s25_orc_native_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .sortWithinPartitions("o_orderkey")
         )
         write_orc(df, dest, row_index_stride=1000)
-        write_marker(dest + "._fp", fp)
+
+    staged(dest, fp, build)
     register_orc_native(spark)
     scan = (
         spark.read.format("orc_native")
@@ -1446,6 +1478,23 @@ _S26_SPLIT = 800                 # old generation: l_orderkey < 800
 _S26_LO, _S26_HI = 500, 1200     # spans BOTH generations at every SF
 
 
+def _write_generations(dest: str, generations: list[tuple[str, DataFrame]]) -> None:
+    """Write each (prefix, df) generation with a 1000-row stride into a
+    sibling directory, then rename its files into `dest` as
+    `<prefix>_<i>.orc`: the multi-generation lake layout s26, s28, s29
+    and s30 read, where the prefixes order the generations by name."""
+    import glob
+    import shutil
+
+    os.makedirs(dest, exist_ok=True)
+    for prefix, df in generations:
+        gen = f"{dest}_{prefix}"
+        write_orc(df, gen, row_index_stride=1000)
+        for i, f in enumerate(sorted(glob.glob(os.path.join(gen, "*.orc")))):
+            os.replace(f, os.path.join(dest, f"{prefix}_{i}.orc"))
+        shutil.rmtree(gen)
+
+
 def s26_evolved_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Evolved-lake scan with AUTOMATIC reader-schema election (r11
     verdict Next #2/#3): the lake mixes two generations of lineitem —
@@ -1473,7 +1522,6 @@ def s26_evolved_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the original parquet — DuckDB never sees ORC, election, or the
     convert layer."""
     import glob
-    import shutil
 
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
         read_planned_lake,
@@ -1483,8 +1531,8 @@ def s26_evolved_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = source_fingerprint(sf_dir, "lineitem") + (
         f";split={_S26_SPLIT};files=2+2;stride=1000;v1"
     )
-    if not marker_valid(dest + "._fp", fp):
-        shutil.rmtree(dest, ignore_errors=True)
+
+    def build():
         li = load_table(spark, sf_dir, "lineitem")
         old = (
             li.filter(F.col("l_orderkey") < _S26_SPLIT)
@@ -1509,14 +1557,9 @@ def s26_evolved_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartitionByRange(2, "l_orderkey")
             .sortWithinPartitions("l_orderkey")
         )
-        write_orc(old, dest + "_g0", row_index_stride=1000)
-        write_orc(new, dest + "_g1", row_index_stride=1000)
-        os.makedirs(dest, exist_ok=True)
-        for gen, prefix in ((dest + "_g0", "a_g0"), (dest + "_g1", "z_g1")):
-            for i, f in enumerate(sorted(glob.glob(os.path.join(gen, "*.orc")))):
-                shutil.copy(f, os.path.join(dest, f"{prefix}_{i}.orc"))
-            shutil.rmtree(gen)
-        write_marker(dest + "._fp", fp)
+        _write_generations(dest, [("a_g0", old), ("z_g1", new)])
+
+    staged(dest, fp, build)
     files = sorted(glob.glob(os.path.join(dest, "*.orc")))
     cols = ["l_orderkey", "l_quantity", "l_returnflag", "l_disc_price"]
     tree = ("between", "l_orderkey", [_S26_LO, _S26_HI])
@@ -1567,7 +1610,8 @@ def _s27_stage(spark: SparkSession, sf_dir: str) -> str:
     keying) give disjoint custkey ranges per file AND per row group."""
     dest = os.path.join(scratch_dir(sf_dir), "orc", "orders_custkey_sorted")
     fp = source_fingerprint(sf_dir, "orders") + ";files=4;stride=1000;v1"
-    if not marker_valid(dest + "._fp", fp):
+
+    def build():
         df = (
             load_table(spark, sf_dir, "orders")
             .repartitionByRange(4, "o_custkey")
@@ -1582,8 +1626,8 @@ def _s27_stage(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         write_orc(df, dest, row_index_stride=1000)
-        write_marker(dest + "._fp", fp)
-    return dest
+
+    return staged(dest, fp, build)
 
 
 def s27_nested_sarg_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1669,7 +1713,6 @@ def s28_positional_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the original parquet; DuckDB never sees `_col` names,
     election, or the translation."""
     import glob
-    import shutil
 
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
         read_planned_lake,
@@ -1679,8 +1722,8 @@ def s28_positional_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = source_fingerprint(sf_dir, "orders") + (
         f";split={_S28_SPLIT};files=2+2;stride=1000;v1"
     )
-    if not marker_valid(dest + "._fp", fp):
-        shutil.rmtree(dest, ignore_errors=True)
+
+    def build():
         o = load_table(spark, sf_dir, "orders")
         old = (
             o.filter(F.col("o_orderkey") < _S28_SPLIT)
@@ -1703,14 +1746,9 @@ def s28_positional_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartitionByRange(2, "o_orderkey")
             .sortWithinPartitions("o_orderkey")
         )
-        write_orc(old, dest + "_g0", row_index_stride=1000)
-        write_orc(new, dest + "_g1", row_index_stride=1000)
-        os.makedirs(dest, exist_ok=True)
-        for gen, prefix in ((dest + "_g0", "a_g0"), (dest + "_g1", "z_g1")):
-            for i, f in enumerate(sorted(glob.glob(os.path.join(gen, "*.orc")))):
-                shutil.copy(f, os.path.join(dest, f"{prefix}_{i}.orc"))
-            shutil.rmtree(gen)
-        write_marker(dest + "._fp", fp)
+        _write_generations(dest, [("a_g0", old), ("z_g1", new)])
+
+    staged(dest, fp, build)
     files = sorted(glob.glob(os.path.join(dest, "*.orc")))
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice", "o_custkey"]
     tree = ("between", "o_orderkey", [_S28_LO, _S28_HI])
@@ -1758,15 +1796,12 @@ def _s29_stage(spark: SparkSession, sf_dir: str) -> str:
     for ACID files; `positionalLevels = isAcid ? 2 : 1`). The new
     delta inserts the rest with real row names plus an added
     o_custkey, and a third delta DELETEs every okey % 10 == 0."""
-    import glob
-    import shutil
-
     dest = os.path.join(scratch_dir(sf_dir), "orc", "orders_acid_positional")
     fp = source_fingerprint(sf_dir, "orders") + (
         f";split={_S29_SPLIT};files=2+2+1;stride=1000;v1"
     )
-    if not marker_valid(dest + "._fp", fp):
-        shutil.rmtree(dest, ignore_errors=True)
+
+    def build():
         o = load_table(spark, sf_dir, "orders")
 
         def events(df: DataFrame, txn: int, op: int, row_cols) -> DataFrame:
@@ -1801,19 +1836,9 @@ def _s29_stage(spark: SparkSession, sf_dir: str) -> str:
         dels = events(
             o.filter(F.col("o_orderkey") % 10 == 0), 3, 2, new_row
         ).coalesce(1).sortWithinPartitions("row.o_orderkey")
-        write_orc(old, dest + "_d1", row_index_stride=1000)
-        write_orc(new, dest + "_d2", row_index_stride=1000)
-        write_orc(dels, dest + "_d3", row_index_stride=1000)
-        os.makedirs(dest, exist_ok=True)
-        for gen, prefix in (
-            (dest + "_d1", "a_d1"), (dest + "_d2", "b_d2"),
-            (dest + "_d3", "c_d3"),
-        ):
-            for i, f in enumerate(sorted(glob.glob(os.path.join(gen, "*.orc")))):
-                shutil.copy(f, os.path.join(dest, f"{prefix}_{i}.orc"))
-            shutil.rmtree(gen)
-        write_marker(dest + "._fp", fp)
-    return dest
+        _write_generations(dest, [("a_d1", old), ("b_d2", new), ("c_d3", dels)])
+
+    return staged(dest, fp, build)
 
 
 def s29_acid_positional_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1909,7 +1934,6 @@ def s30_forced_positional_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a name rewrite); force-positional changes WHICH files
     reconcile, not the cost of reconciling them."""
     import glob
-    import shutil
 
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
         read_planned_lake,
@@ -1919,8 +1943,8 @@ def s30_forced_positional_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = source_fingerprint(sf_dir, "orders") + (
         f";split={_S30_SPLIT};files=2+2;stride=1000;v1"
     )
-    if not marker_valid(dest + "._fp", fp):
-        shutil.rmtree(dest, ignore_errors=True)
+
+    def build():
         o = load_table(spark, sf_dir, "orders")
         old = (
             o.filter(F.col("o_orderkey") < _S30_SPLIT)
@@ -1943,14 +1967,9 @@ def s30_forced_positional_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartitionByRange(2, "o_orderkey")
             .sortWithinPartitions("o_orderkey")
         )
-        write_orc(old, dest + "_g0", row_index_stride=1000)
-        write_orc(new, dest + "_g1", row_index_stride=1000)
-        os.makedirs(dest, exist_ok=True)
-        for gen, prefix in ((dest + "_g0", "a_g0"), (dest + "_g1", "z_g1")):
-            for i, f in enumerate(sorted(glob.glob(os.path.join(gen, "*.orc")))):
-                shutil.copy(f, os.path.join(dest, f"{prefix}_{i}.orc"))
-            shutil.rmtree(gen)
-        write_marker(dest + "._fp", fp)
+        _write_generations(dest, [("a_g0", old), ("z_g1", new)])
+
+    staged(dest, fp, build)
     files = sorted(glob.glob(os.path.join(dest, "*.orc")))
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice", "o_custkey"]
     tree = ("between", "o_orderkey", [_S30_LO, _S30_HI])
@@ -2020,9 +2039,8 @@ def s31_native_writer_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = source_fingerprint(sf_dir, "orders") + (
         ";writer=native;files=4;stride=1000;blooms=o_orderkey"
     )
-    if not marker_valid(dest + "._fp", fp):
-        import shutil
 
+    def build():
         register_orc_native_sink(spark)
         df = (
             load_table(spark, sf_dir, "orders")
@@ -2030,7 +2048,6 @@ def s31_native_writer_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartitionByRange(4, "o_orderkey")
             .sortWithinPartitions("o_orderkey")
         )
-        shutil.rmtree(dest, ignore_errors=True)
         (
             df.write.format("orc_native_sink")
             .option("path", dest)
@@ -2039,7 +2056,8 @@ def s31_native_writer_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("append")
             .save()
         )
-        write_marker(dest + "._fp", fp)
+
+    staged(dest, fp, build)
     scan = spark.read.orc(dest)
     return (
         scan.filter(

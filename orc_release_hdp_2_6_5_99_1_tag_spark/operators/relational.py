@@ -36,12 +36,6 @@ def _disc_price():
     return _dec("l_extendedprice") * (F.lit(1).cast("decimal(8,4)") - F.col("l_discount").cast("decimal(8,4)"))
 
 
-def _charge():
-    return (_disc_price() * (F.lit(1).cast("decimal(8,4)") + F.col("l_tax").cast("decimal(8,4)"))).cast(
-        "decimal(30,6)"
-    )
-
-
 def _sum_revenue():
     """Σ price·(1−discount) via integer arithmetic (q1's measured
     lesson — long-backed accumulation beats decimal accumulators

@@ -13,7 +13,6 @@ scan — the 100 TB pattern where a full cross join is impossible.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf type hints resolve here
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -367,47 +366,6 @@ WITH b AS (
 )
 SELECT query_id, vec_id, printf('%.4f', cosine_raw) AS cosine, bucket FROM ranked WHERE rank = 1 ORDER BY query_id
 """
-
-
-def cosine_topk_vectorized(
-    spark: SparkSession, sf_dir: str, n_queries: int = _N_QUERIES, top_k: int = _TOP_K
-) -> DataFrame:
-    """The Arrow fast path for v1: per-batch numpy matrix product
-    inside a pandas_udf (one BLAS gemm per Arrow batch vs an
-    interpreted per-element lambda — the 10-100× vectorization the
-    scale path needs). The query matrix is collected once (it is the
-    broadcast-small side by construction) and shipped inside the UDF
-    closure. Exactness is anchored by the parity test against v1's
-    zip_with/aggregate baseline; numpy's pairwise summation can differ
-    from sequential summation in the last ulp, which is why this
-    variant is pytest-anchored rather than oracle-hashed."""
-    import numpy as np
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q_rows = sorted(
-        e.filter(F.col("vec_id") < n_queries).select("vec_id", "embedding").collect(),
-        key=lambda r: r.vec_id,
-    )
-    qm = np.array([r.embedding for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1)
-
-    @F.pandas_udf("array<double>")
-    def cos_all(emb: pd.Series) -> pd.Series:
-        m = np.array(emb.tolist(), dtype=np.float64)
-        dots = m @ qm.T
-        norms = np.linalg.norm(m, axis=1)[:, None] * qn[None, :]
-        return pd.Series((dots / norms).tolist())
-
-    expl = e.select("vec_id", cos_all("embedding").alias("cos")).select(
-        "vec_id", F.posexplode("cos").alias("query_id", "cosine_raw")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
-    return (
-        expl.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("query_id", "vec_id", "cosine_raw", "rank")
-        .orderBy("query_id", "rank")
-    )
 
 
 # ---------------------------------------------------------------------------

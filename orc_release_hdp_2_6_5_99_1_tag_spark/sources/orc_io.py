@@ -31,10 +31,9 @@ from orc_release_hdp_2_6_5_99_1_tag_spark.session import (
 )
 from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
     load_table,
-    marker_valid,
     scratch_dir,
     source_fingerprint,
-    write_marker,
+    staged,
 )
 
 
@@ -214,31 +213,28 @@ def orc_copy(
     import math
 
     dest = os.path.join(scratch_dir(sf_dir), "orc", f"{table}_{variant}")
-    # fingerprint marker lives NEXT TO dest (mode=overwrite wipes dest);
+
+    def build():
+        df = load_table(spark, sf_dir, table)
+        n_files = (
+            max(1, math.ceil(df.count() / target_file_rows)) if target_file_rows else None
+        )
+        if sort_by:
+            # Range-partition on the sort key, then sort within each task:
+            # every output file covers a disjoint key range, so row-group
+            # min/max stats stay disjoint (the reference's split-elimination
+            # layout, examples/orc_split_elim.orc) while the write runs in
+            # parallel instead of through one task.
+            args = ([n_files] if n_files else []) + list(sort_by)
+            df = df.repartitionByRange(*args).sortWithinPartitions(*sort_by)
+        elif n_files:
+            df = df.repartition(n_files)
+        write_orc(
+            df,
+            dest,
+            compression=compression,
+            bloom_filter_columns=bloom_filter_columns,
+        )
+
     # keyed on the source parquet so copies rebuild when testdata changes
-    marker = dest + "._fp"
-    fp = source_fingerprint(sf_dir, table)
-    if marker_valid(marker, fp):
-        return dest
-    df = load_table(spark, sf_dir, table)
-    n_files = (
-        max(1, math.ceil(df.count() / target_file_rows)) if target_file_rows else None
-    )
-    if sort_by:
-        # Range-partition on the sort key, then sort within each task:
-        # every output file covers a disjoint key range, so row-group
-        # min/max stats stay disjoint (the reference's split-elimination
-        # layout, examples/orc_split_elim.orc) while the write runs in
-        # parallel instead of through one task.
-        args = ([n_files] if n_files else []) + list(sort_by)
-        df = df.repartitionByRange(*args).sortWithinPartitions(*sort_by)
-    elif n_files:
-        df = df.repartition(n_files)
-    write_orc(
-        df,
-        dest,
-        compression=compression,
-        bloom_filter_columns=bloom_filter_columns,
-    )
-    write_marker(marker, fp)
-    return dest
+    return staged(dest, source_fingerprint(sf_dir, table), build)

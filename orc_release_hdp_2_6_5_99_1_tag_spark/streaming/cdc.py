@@ -24,7 +24,6 @@ the pressure valve, exactly as in the reference's design.
 from __future__ import annotations
 
 import os
-import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -38,10 +37,9 @@ from orc_release_hdp_2_6_5_99_1_tag_spark.operators.acid import (
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import write_orc
 from orc_release_hdp_2_6_5_99_1_tag_spark.streaming.ingest import _await, _events_stream
 from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
-    marker_valid,
     scratch_dir,
     source_fingerprint,
-    write_marker,
+    staged,
 )
 
 _N_BUCKETS = 4
@@ -84,16 +82,9 @@ def r4_streaming_acid_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream → foreachBatch ACID delta writer → merged view: latest
     non-tombstoned state per user."""
     root = os.path.join(scratch_dir(sf_dir), "acid", "users_cdc")
-    done = os.path.join(root, "_stream_done")
     ckpt = os.path.join(scratch_dir(sf_dir), "stream", "cdc_ckpt")
-    fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(done, fp):
-        # stale/absent marker ⇒ the output is absent, partial, or built
-        # from different testdata; a surviving checkpoint would make the
-        # availableNow replay a no-op, so sink and checkpoint are
-        # rebuilt as a unit
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+
+    def build():
         os.makedirs(root, exist_ok=True)
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -125,7 +116,10 @@ def r4_streaming_acid_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         _await(q)
-        write_marker(done, fp)
+
+    # a surviving checkpoint would make the availableNow replay a no-op,
+    # so sink and checkpoint are rebuilt as a unit
+    staged(root, source_fingerprint(sf_dir, "events"), build, clear=(root, ckpt))
     parts = [
         _read_events(spark, os.path.join(root, d))
         for d in sorted(os.listdir(root))

@@ -27,8 +27,8 @@ window is finalized and emitted before the availableNow run terminates
 from __future__ import annotations
 
 import os
-import shutil
-from contextlib import contextmanager
+from collections.abc import Callable
+from contextlib import contextmanager, nullcontext
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -39,10 +39,9 @@ from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
     _epoch_units_per_second,
     _explicit_ddl,
     events_ts_parquet_type,
-    marker_valid,
     scratch_dir,
     source_fingerprint,
-    write_marker,
+    staged,
 )
 
 _EVENTS_NANOS_SCHEMA = (
@@ -73,8 +72,9 @@ def _state_sized_shuffle(spark: SparkSession):
     around a stateful stream's start+await: the count is captured into
     the query's checkpoint at first run, so without this every stream
     inherits the CPU-sized batch width and pays 4x the state-store
-    commits per micro-batch. Restored on exit; cold paths rmtree their
-    checkpoints, so the pinned width never conflicts with a resume."""
+    commits per micro-batch. Restored on exit; a cold sink is rebuilt
+    with its checkpoint (`_drain`), so the pinned width never conflicts
+    with a resume."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(_STREAM_STATE_PARTITIONS))
     try:
@@ -98,6 +98,44 @@ def _await(q: StreamingQuery, timeout: int = _STREAM_TIMEOUT_S) -> None:
             f"streaming query did not terminate within {timeout}s; "
             "sink left unmarked so the next call rebuilds it"
         )
+
+
+def _drain(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    fp: str,
+    plan: Callable[[], DataFrame],
+    *,
+    fmt: str = "parquet",
+    stateful: bool = True,
+    inputs: tuple[str, ...] = (),
+    **options: str,
+) -> str:
+    """Stage the stream sink `stream/<name>` and return its path: drain
+    `plan()` into it once with availableNow, checkpointed at
+    `stream/<name>_ckpt`. A stale sink is rebuilt together with its
+    checkpoint and the per-query topic dirs named in `inputs` (a
+    surviving checkpoint would turn the replay into a no-op over an
+    empty sink). Stateful plans run under `_state_sized_shuffle`."""
+    stream_dir = os.path.join(scratch_dir(sf_dir), "stream")
+    out = os.path.join(stream_dir, name)
+    ckpt = out + "_ckpt"
+
+    def build():
+        writer = (
+            plan().writeStream.format(fmt)
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .options(**options)
+            .outputMode("append")
+            .trigger(availableNow=True)
+        )
+        with _state_sized_shuffle(spark) if stateful else nullcontext():
+            _await(writer.start())
+
+    clear = (*(os.path.join(stream_dir, sub) for sub in inputs), out, ckpt)
+    return staged(out, fp, build, clear=clear)
 
 
 def _not_sentinel(col: str):
@@ -268,26 +306,26 @@ def _stage_filtered_topics(sf_dir: str, topics: list[tuple[str, str]]) -> None:
     purchases topic (r11) pay one table scan instead of one per topic.
     Markers are per-topic, so a partially-valid set only restages the
     missing topics."""
+    from functools import cache
+
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    fp_base = source_fingerprint(sf_dir, "events")
-    todo = []
+    events = cache(lambda: pq.read_table(os.path.join(sf_dir, "events.parquet")))
+    fp = source_fingerprint(sf_dir, "events")
     for src_dir, only_type in topics:
-        marker = os.path.join(src_dir, "_filtered_done")
-        fp = fp_base + f";only_type={only_type}"
-        if not marker_valid(marker, fp):
-            todo.append((src_dir, only_type, marker, fp))
-    if not todo:
-        return
-    path = os.path.join(sf_dir, "events.parquet")
-    t = pq.read_table(path)
-    for src_dir, only_type, marker, fp in todo:
-        os.makedirs(src_dir, exist_ok=True)
-        filtered = t.filter(pc.equal(t["event_type"], only_type))
-        dest = os.path.join(src_dir, "events_filtered.parquet")
-        pq.write_table(filtered, dest, version="2.6")
-        write_marker(marker, fp)
+
+        def build(src_dir=src_dir, only_type=only_type):
+            os.makedirs(src_dir, exist_ok=True)
+            t = events()
+            pq.write_table(
+                t.filter(pc.equal(t["event_type"], only_type)),
+                os.path.join(src_dir, "events_filtered.parquet"),
+                version="2.6",
+            )
+
+        dest = os.path.join(src_dir, "_filtered")
+        staged(dest, fp + f";only_type={only_type}", build, clear=())
 
 
 def _stage_splits(sf_dir: str, src_dir: str, splits: int, copies: int = 1) -> None:
@@ -306,25 +344,24 @@ def _stage_splits(sf_dir: str, src_dir: str, splits: int, copies: int = 1) -> No
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    marker = os.path.join(src_dir, "_splits_done")
+    def build():
+        path = os.path.join(sf_dir, "events.parquet")
+        t = pq.read_table(path)
+        t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending")]))
+        n = t.num_rows
+        # anchor past any source-file mtime for deterministic batch order
+        base = max(time.time(), os.path.getmtime(path))
+        for i in range(splits):
+            lo, hi = i * n // splits, (i + 1) * n // splits
+            for c in range(copies):
+                dest = os.path.join(src_dir, f"events_part{i}_{chr(97 + c)}.parquet")
+                # version 2.6 keeps ns/us timestamp units unchanged
+                pq.write_table(t.slice(lo, hi - lo), dest, version="2.6")
+                seq = i * copies + c
+                os.utime(dest, (base + seq, base + seq))
+
     fp = source_fingerprint(sf_dir, "events") + f";splits={splits};copies={copies}"
-    if marker_valid(marker, fp):
-        return
-    path = os.path.join(sf_dir, "events.parquet")
-    t = pq.read_table(path)
-    t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending")]))
-    n = t.num_rows
-    # anchor past any source-file mtime for deterministic batch order
-    base = max(time.time(), os.path.getmtime(path))
-    for i in range(splits):
-        lo, hi = i * n // splits, (i + 1) * n // splits
-        for c in range(copies):
-            dest = os.path.join(src_dir, f"events_part{i}_{chr(97 + c)}.parquet")
-            # version 2.6 keeps ns/us timestamp units unchanged
-            pq.write_table(t.slice(lo, hi - lo), dest, version="2.6")
-            seq = i * copies + c
-            os.utime(dest, (base + seq, base + seq))
-    write_marker(marker, fp)
+    staged(os.path.join(src_dir, "_splits"), fp, build, clear=())
 
 
 _SENTINEL_DAYS_CACHE: dict[str, tuple[str, str]] = {}
@@ -409,9 +446,19 @@ def _sentinel_days(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
 
 def _stage_sentinel(spark: SparkSession, sf_dir: str, src_dir: str) -> None:
+    """Stage the two watermark sentinels into `src_dir`, keyed on the
+    source fingerprint so they restage when testdata changes."""
+    staged(
+        os.path.join(src_dir, "_sentinel"),
+        source_fingerprint(sf_dir, "events"),
+        lambda: _write_sentinels(spark, sf_dir, src_dir),
+        clear=(),
+    )
+
+
+def _write_sentinels(spark: SparkSession, sf_dir: str, src_dir: str) -> None:
     """Write the two one-row watermark-advancing sentinel files with
-    staggered mtimes (keyed on the source fingerprint so they restage
-    when testdata changes). The sentinel ts column mirrors the SOURCE
+    staggered mtimes. The sentinel ts column mirrors the SOURCE
     file's physical layout — raw nanos long for the nanos generation,
     raw unit-faithful long for the integer generation, NTZ micros
     otherwise — so the stream's one reader schema fits every file.
@@ -430,10 +477,6 @@ def _stage_sentinel(spark: SparkSession, sf_dir: str, src_dir: str) -> None:
 
     from orc_release_hdp_2_6_5_99_1_tag_spark.tables import _epoch_units_per_second
 
-    marker = os.path.join(src_dir, "_sentinel_done")
-    fp = source_fingerprint(sf_dir, "events")
-    if marker_valid(marker, fp):
-        return
     path = os.path.join(sf_dir, "events.parquet")
     t = events_ts_parquet_type(path)
     nanos = pa.types.is_timestamp(t) and t.unit == "ns"
@@ -492,7 +535,6 @@ def _stage_sentinel(spark: SparkSession, sf_dir: str, src_dir: str) -> None:
         pq.write_table(sent, dest, version="2.6")
         # file-source batches are ordered by mtime: events < s1 < s2
         os.utime(dest, (now + 10 * (i + 1), now + 10 * (i + 1)))
-    write_marker(marker, fp)
 
 
 def r1_streaming_orc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -500,27 +542,11 @@ def r1_streaming_orc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches; then read the sink back and checksum it. Files
     appear atomically per micro-batch commit — the capability the
     reference approximates with intermediate footer flushes."""
-    base = scratch_dir(sf_dir)
-    out = os.path.join(base, "stream", "events_orc")
-    ckpt = os.path.join(base, "stream", "events_orc_ckpt")
-    done = os.path.join(base, "stream", "events_orc._done")
-    fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(done, fp):
-        # rebuild sink + checkpoint as a unit (a stale checkpoint would
-        # turn the availableNow replay into a no-op over an empty sink)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        stream = _events_stream(spark, sf_dir).filter(F.col("event_type") != "error")
-        q = (
-            stream.writeStream.format("orc")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .option("compression", "zlib")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
-        write_marker(done, fp)
+    out = _drain(
+        spark, sf_dir, "events_orc", source_fingerprint(sf_dir, "events"),
+        lambda: _events_stream(spark, sf_dir).filter(F.col("event_type") != "error"),
+        fmt="orc", stateful=False, compression="zlib",
+    )
     df = spark.read.orc(out)
     return df.agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -549,16 +575,10 @@ def r2_streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. The staged sentinel advances the watermark past the data
     horizon so every real window finalizes within the availableNow run.
     """
-    base = scratch_dir(sf_dir)
-    out = os.path.join(base, "stream", "r2_windows")
-    ckpt = os.path.join(base, "stream", "r2_windows_ckpt")
-    done = os.path.join(base, "stream", "r2_windows._done")
-    fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(done, fp):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+
+    def plan():
         stream = _events_stream(spark, sf_dir, with_sentinel=True)
-        agg = (
+        return (
             stream.withWatermark("ts", "0 seconds")
             .groupBy(F.window("ts", "1 day").alias("w"), F.col("event_type"))
             .agg(
@@ -574,17 +594,8 @@ def r2_streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value",
             )
         )
-        with _state_sized_shuffle(spark):
-            q = (
-                agg.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        write_marker(done, fp)
+
+    out = _drain(spark, sf_dir, "r2_windows", source_fingerprint(sf_dir, "events"), plan)
     return (
         spark.read.parquet(out)
         .filter(_not_sentinel("event_type"))
@@ -617,18 +628,10 @@ def r5_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     so state is bounded by concurrently-active users, not history —
     the sentinel closes the final sessions so the availableNow run
     emits everything."""
-    base = scratch_dir(sf_dir)
-    out = os.path.join(base, "stream", "r5_sessions")
-    ckpt = os.path.join(base, "stream", "r5_sessions_ckpt")
-    done = os.path.join(base, "stream", "r5_sessions._done")
-    # ";sink=v2": sink schema gained is_sentinel — a marker from the v1
-    # sink must not validate against the new read-back path
-    fp = source_fingerprint(sf_dir, "events") + ";sink=v2"
-    if not marker_valid(done, fp):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+
+    def plan():
         stream = _events_stream(spark, sf_dir, with_sentinel=True)
-        agg = (
+        return (
             stream.withWatermark("ts", "0 seconds")
             .groupBy(F.session_window("ts", "30 minutes").alias("w"), F.col("user_id"))
             .agg(
@@ -653,17 +656,11 @@ def r5_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "is_sentinel",
             )
         )
-        with _state_sized_shuffle(spark):
-            q = (
-                agg.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        write_marker(done, fp)
+
+    # ";sink=v2": sink schema gained is_sentinel — a marker from the v1
+    # sink must not validate against the new read-back path
+    fp = source_fingerprint(sf_dir, "events") + ";sink=v2"
+    out = _drain(spark, sf_dir, "r5_sessions", fp, plan)
     return (
         spark.read.parquet(out)
         .filter((F.col("is_sentinel") == 0) | F.col("is_sentinel").isNull())
@@ -713,29 +710,15 @@ def r6_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon, not history). The sink checksum equals the batch table's —
     proof no duplicate survived and no original was lost.
     """
-    base = scratch_dir(sf_dir)
-    out = os.path.join(base, "stream", "r6_dedup")
-    ckpt = os.path.join(base, "stream", "r6_dedup_ckpt")
-    done = os.path.join(base, "stream", "r6_dedup._done")
-    fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(done, fp):
-        shutil.rmtree(os.path.join(base, "stream", "events_src_dup"), ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        stream = _events_stream(spark, sf_dir, sub="events_src_dup", copies=2)
-        deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
-            ["event_id"]
-        )
-        with _state_sized_shuffle(spark):
-            q = (
-                deduped.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        write_marker(done, fp)
+    out = _drain(
+        spark, sf_dir, "r6_dedup", source_fingerprint(sf_dir, "events"),
+        lambda: (
+            _events_stream(spark, sf_dir, sub="events_src_dup", copies=2)
+            .withWatermark("ts", "1 hour")
+            .dropDuplicatesWithinWatermark(["event_id"])
+        ),
+        inputs=("events_src_dup",),
+    )
     df = spark.read.parquet(out)
     return df.agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -768,16 +751,10 @@ def r7_stream_stream_join(spark: SparkSession, sf_dir: str, splits: int = 1) -> 
     no sentinel needed. The pair stream lands in a parquet sink; the
     checksum over the sink equals the batch SQL join.
     """
-    base = scratch_dir(sf_dir)
     tag = "r7_pairs" if splits == 1 else f"r7_pairs_s{splits}"
     sub = None if splits == 1 else f"events_src_s{splits}"
-    out = os.path.join(base, "stream", tag)
-    ckpt = os.path.join(base, "stream", f"{tag}_ckpt")
-    done = os.path.join(base, "stream", f"{tag}._done")
-    fp = source_fingerprint(sf_dir, "events") + f";splits={splits}"
-    if not marker_valid(done, fp):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+
+    def plan():
         clicks = (
             _events_stream(spark, sf_dir, sub=sub, splits=splits)
             .filter(F.col("event_type") == "click")
@@ -798,23 +775,15 @@ def r7_stream_stream_join(spark: SparkSession, sf_dir: str, splits: int = 1) -> 
             )
             .withWatermark("p_ts", "1 hour")
         )
-        pairs = clicks.join(
+        return clicks.join(
             purchases,
             (F.col("c_user") == F.col("p_user"))
             & (F.col("p_ts") >= F.col("c_ts") - F.expr("INTERVAL 30 MINUTES"))
             & (F.col("p_ts") <= F.col("c_ts")),
         )
-        with _state_sized_shuffle(spark):
-            q = (
-                pairs.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        write_marker(done, fp)
-    df = spark.read.parquet(out)
+
+    fp = source_fingerprint(sf_dir, "events") + f";splits={splits}"
+    df = spark.read.parquet(_drain(spark, sf_dir, tag, fp, plan))
     return df.agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.count_distinct("c_user").alias("nd_users"),
@@ -853,22 +822,15 @@ def r8_streaming_pipeline(spark: SparkSession, sf_dir: str, splits: int = 1) -> 
     redelivery pattern. Sentinels ride the quality filter via their
     reserved type and close the final windows.
     """
-    base = scratch_dir(sf_dir)
     tag = "r8_pipeline" if splits == 1 else f"r8_pipeline_s{splits}"
     sub = "events_src_pipe" if splits == 1 else f"events_src_pipe_s{splits}"
-    out = os.path.join(base, "stream", tag)
-    ckpt = os.path.join(base, "stream", f"{tag}_ckpt")
-    done = os.path.join(base, "stream", f"{tag}._done")
-    fp = source_fingerprint(sf_dir, "events") + f";splits={splits}"
-    if not marker_valid(done, fp):
-        shutil.rmtree(os.path.join(base, "stream", sub), ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+
+    def plan():
         stream = _events_stream(
             spark, sf_dir, with_sentinel=True, sub=sub, copies=2, splits=splits
         )
         quality = (F.col("event_type") != "error") & (F.col("value") >= 1.0)
-        agg = (
+        return (
             stream.withWatermark("ts", "1 hour")
             # sentinel rows must pass the (pushed-down) quality filter
             # so they still reach the watermark collector
@@ -888,17 +850,9 @@ def r8_streaming_pipeline(spark: SparkSession, sf_dir: str, splits: int = 1) -> 
                 "sum_value",
             )
         )
-        with _state_sized_shuffle(spark):
-            q = (
-                agg.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        write_marker(done, fp)
+
+    fp = source_fingerprint(sf_dir, "events") + f";splits={splits}"
+    out = _drain(spark, sf_dir, tag, fp, plan, inputs=(sub,))
     return (
         spark.read.parquet(out)
         .filter(_not_sentinel("event_type"))
@@ -934,20 +888,9 @@ def r9_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     event firehose against slowly-changing reference data at 100 TB/day
     — the dimension refreshes per micro-batch read, state stays zero.
     """
-    base = scratch_dir(sf_dir)
-    out = os.path.join(base, "stream", "r9_enriched")
-    ckpt = os.path.join(base, "stream", "r9_enriched_ckpt")
-    done = os.path.join(base, "stream", "r9_enriched._done")
-    fp = (
-        source_fingerprint(sf_dir, "events")
-        + ";"
-        + source_fingerprint(sf_dir, "customer")
-    )
-    if not marker_valid(done, fp):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table
+    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table
 
+    def plan():
         cust = load_table(spark, sf_dir, "customer").select(
             "c_custkey", "c_nationkey", "c_mktsegment"
         )
@@ -958,7 +901,7 @@ def r9_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"]
         ).select("c_custkey", "n_name", "c_mktsegment")
         stream = _events_stream(spark, sf_dir)
-        enriched = stream.join(
+        return stream.join(
             F.broadcast(dim), stream["user_id"] == dim["c_custkey"], "left"
         ).select(
             "event_id",
@@ -968,16 +911,13 @@ def r9_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("n_name"), F.lit("UNKNOWN")).alias("n_name"),
             F.coalesce(F.col("c_mktsegment"), F.lit("UNKNOWN")).alias("segment"),
         )
-        q = (
-            enriched.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
-        write_marker(done, fp)
-    df = spark.read.parquet(out)
+
+    fp = (
+        source_fingerprint(sf_dir, "events")
+        + ";"
+        + source_fingerprint(sf_dir, "customer")
+    )
+    df = spark.read.parquet(_drain(spark, sf_dir, "r9_enriched", fp, plan, stateful=False))
     return (
         df.groupBy("n_name")
         .agg(
@@ -1018,17 +958,11 @@ def r10_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     The batch w8 query over the same events is the exact oracle: a
     correct continuous aggregate must equal its full recompute.
     """
-    base = scratch_dir(sf_dir)
-    out = os.path.join(base, "stream", "r10_ohlc")
-    ckpt = os.path.join(base, "stream", "r10_ohlc_ckpt")
-    done = os.path.join(base, "stream", "r10_ohlc._done")
-    fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(done, fp):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+
+    def plan():
         stream = _events_stream(spark, sf_dir, with_sentinel=True)
         tv = F.struct(F.col("ts"), F.col("value"))
-        agg = (
+        return (
             stream.withWatermark("ts", "0 seconds")
             .groupBy(F.window("ts", "1 hour").alias("w"), F.col("user_id"))
             .agg(
@@ -1056,17 +990,8 @@ def r10_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "is_sentinel",
             )
         )
-        with _state_sized_shuffle(spark):
-            q = (
-                agg.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        write_marker(done, fp)
+
+    out = _drain(spark, sf_dir, "r10_ohlc", source_fingerprint(sf_dir, "events"), plan)
     return (
         spark.read.parquet(out)
         .filter(F.col("is_sentinel") == 0)
@@ -1133,13 +1058,8 @@ def r11_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a join whose per-batch state fits in a few MB).
     """
     base = scratch_dir(sf_dir)
-    out = os.path.join(base, "stream", "r11_outer")
-    ckpt = os.path.join(base, "stream", "r11_outer_ckpt")
-    done = os.path.join(base, "stream", "r11_outer._done")
-    fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(done, fp):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+
+    def plan():
         # both topics staged in ONE pass over events (single table
         # read, two filtered writes). The topic dirs are NOT deleted
         # here: every staging step inside them (filtered copy,
@@ -1188,23 +1108,15 @@ def r11_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withWatermark("p_ts", "1 hour")
         )
-        joined = clicks.join(
+        return clicks.join(
             purchases,
             (F.col("c_user") == F.col("p_user"))
             & (F.col("p_ts") >= F.col("c_ts") - F.expr("INTERVAL 30 MINUTES"))
             & (F.col("p_ts") <= F.col("c_ts")),
             "leftOuter",
         )
-        with _state_sized_shuffle(spark):
-            q = (
-                joined.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        write_marker(done, fp)
+
+    out = _drain(spark, sf_dir, "r11_outer", source_fingerprint(sf_dir, "events"), plan)
     df = spark.read.parquet(out).filter(_not_sentinel("c_type"))
     return df.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1258,9 +1170,9 @@ def r12_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(scratch_dir(sf_dir), "stream", "pyds_source")
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
     fp = f"synthetic_events;n={SYNTH_N};batch={SYNTH_BATCH}"
-    if not marker_valid(base + "._fp", fp):
+
+    def build():
         register_synthetic_events(spark)
-        shutil.rmtree(base, ignore_errors=True)
         runs = SYNTH_N // SYNTH_BATCH + 1  # one run PAST the fixpoint
         for _ in range(runs):
             q = (
@@ -1273,7 +1185,8 @@ def r12_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .start()
             )
             _await(q, 120)
-        write_marker(base + "._fp", fp)
+
+    staged(base, fp, build)
     return (
         spark.read.schema("id bigint, bucket int, amount bigint")
         .parquet(sink)

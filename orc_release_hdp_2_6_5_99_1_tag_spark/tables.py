@@ -16,6 +16,8 @@ the same file-vs-reader-type resolution the reference performs in
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import TimestampNTZType
@@ -32,9 +34,6 @@ TABLE_NAMES = [
     "documents",
     "embeddings",
 ]
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
@@ -235,12 +234,20 @@ def _epoch_micros_expr(path: str):
     return F.col("ts") * (1_000_000 // ups)
 
 
+# `.scratch/` next to the package directory: each checkout stages its
+# own artifacts, so two checkouts never share a fingerprint-valid stage
+_SCRATCH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
+
 def scratch_dir(sf_dir: str) -> str:
     """Per-sf scratch directory for derived artifacts (ORC copies, ACID
-    delta dirs, streaming checkpoints). Lives under the repo, gitignored.
+    delta dirs, streaming checkpoints). Lives under the checkout's
+    gitignored `.scratch/`.
     """
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    d = os.path.join("/root/repo/.scratch", tag)
+    d = os.path.join(_SCRATCH_ROOT, tag)
     os.makedirs(d, exist_ok=True)
     return d
 
@@ -271,6 +278,45 @@ def marker_valid(marker_path: str, fingerprint: str) -> bool:
         return False
 
 
-def write_marker(marker_path: str, fingerprint: str) -> None:
-    with open(marker_path, "w") as fh:
+def staged(
+    dest: str,
+    fingerprint: str,
+    build: Callable[[], object],
+    clear: Iterable[str] | None = None,
+) -> str:
+    """Stage a derived input at `dest` and return `dest`.
+
+    The stage is valid only while its marker `<dest>._fp` holds
+    `fingerprint`, and the marker is written only after `build()`
+    returns: the ORC rule that a file is valid once its tail is
+    written last. A matching marker returns at once. Otherwise the
+    marker and every path in `clear` (default: `dest` alone) are
+    removed, then `build()` runs. An exception from `build()`
+    propagates and leaves no marker, so the next call rebuilds instead
+    of serving a partial stage. Stagers that write into a directory
+    other stagers share pass `clear=()` and name `dest` inside it with
+    a leading underscore, which Spark's file sources skip.
+    """
+    marker = dest + "._fp"
+    if marker_valid(marker, fingerprint):
+        return dest
+    for path in (marker, *((dest,) if clear is None else clear)):
+        _remove(path)
+    build()
+    with open(marker, "w") as fh:
         fh.write(fingerprint)
+    return dest
+
+
+def unstage(dest: str) -> None:
+    """Remove a staged input and its marker, so the next `staged` call
+    for `dest` rebuilds it."""
+    _remove(dest + "._fp")
+    _remove(dest)
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path) and not os.path.islink(path):
+        shutil.rmtree(path, ignore_errors=True)
+    elif os.path.lexists(path):
+        os.remove(path)

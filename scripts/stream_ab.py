@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from orc_release_hdp_2_6_5_99_1_tag_spark import catalog, get_spark
 from orc_release_hdp_2_6_5_99_1_tag_spark.streaming.ingest import stage_shared_topics
-from orc_release_hdp_2_6_5_99_1_tag_spark.tables import scratch_dir
+from orc_release_hdp_2_6_5_99_1_tag_spark.tables import scratch_dir, unstage
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -64,9 +64,7 @@ def main() -> None:
     stage_times: list[float] = []
     for _ in range(reps):
         shutil.rmtree(os.path.join(scratch_dir(SF_DIR), "stream"), ignore_errors=True)
-        shutil.rmtree(
-            os.path.join(scratch_dir(SF_DIR), "acid", "users_cdc"), ignore_errors=True
-        )
+        unstage(os.path.join(scratch_dir(SF_DIR), "acid", "users_cdc"))
         t0 = time.time()
         stage_shared_topics(spark, SF_DIR)
         stage_times.append(round(time.time() - t0, 3))

@@ -231,7 +231,7 @@ def test_loader_handles_nanos_generation(spark, tmp_path):
     q.awaitTermination(300)
     sgot = [r["ts"] for r in spark.read.parquet(out).orderBy("event_id").collect()]
     assert sgot == got, "stream nanos branch disagrees with batch"
-    shutil.rmtree(os.path.join("/root/repo/.scratch", "sfnanos"), ignore_errors=True)
+    shutil.rmtree(scratch_dir(sf), ignore_errors=True)
 
 
 @pytest.mark.parametrize("unit,mult", [("ns", 1000000000), ("us", 1000000), ("ms", 1000), ("s", 1)])
@@ -331,7 +331,9 @@ def test_scratch_caches_rebuild_on_source_change(spark, tmp_path):
     )
     import shutil
 
-    shutil.rmtree(os.path.join("/root/repo/.scratch", "sffp"), ignore_errors=True)
+    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import scratch_dir
+
+    shutil.rmtree(scratch_dir(sf), ignore_errors=True)
 
 
 def test_explicit_ddl_matches_inference(spark):

@@ -49,35 +49,3 @@ def test_kmeans_matches_numpy_replay(spark, sf_dir):
     assert got == expected
     # sanity: the run actually moved past the init partition
     assert len(set(got.values())) > 1
-
-
-def test_bulk_assignment_matches_literal_argmin(spark, sf_dir):
-    """The broadcast-table assignment (large-k scale path) must
-    produce bit-identical assignments to the literal-argmin path,
-    including (distance, cid) tie-breaks."""
-    import pyspark.sql.functions as F
-
-    from orc_release_hdp_2_6_5_99_1_tag_spark.operators.clustering import (
-        _K,
-        _assign,
-        assign_bulk,
-    )
-    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    cents = sorted(
-        (int(r["vec_id"]), list(r["v"]))
-        for r in e.filter(F.col("vec_id") < _K).collect()
-    )
-    lit = {
-        r["vec_id"]: r["cluster"] for r in _assign(e, cents).collect()
-    }
-    cdf = spark.createDataFrame(
-        [(cid, c) for cid, c in cents], "cid int, c array<double>"
-    )
-    bulk = {
-        r["vec_id"]: r["cluster"] for r in assign_bulk(e, cdf).collect()
-    }
-    assert lit == bulk

@@ -411,7 +411,7 @@ def test_r11_cold_shape_stays_amortized(spark, sf_dir):
     for d in ("r11_clicks_src", "r11_purch_src", "r11_outer", "r11_outer_ckpt"):
         shutil.rmtree(os.path.join(base, d), ignore_errors=True)
     try:
-        os.remove(os.path.join(base, "r11_outer._done"))
+        os.remove(os.path.join(base, "r11_outer._fp"))
     except FileNotFoundError:
         pass
     r11_stream_outer_join(spark, sf_dir).collect()
