@@ -358,11 +358,9 @@ def elect_reader_meta(
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
         parse_tail_of_file,
     )
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
-        _ship_package,
-    )
+    from orc_release_hdp_2_6_5_99_1_tag_spark.session import ship_engine
 
-    _ship_package(spark)
+    ship_engine(spark)
     files_df = spark.createDataFrame(
         [(p,) for p in paths], "path string"
     ).repartition(min(len(paths), 256))

@@ -6,8 +6,8 @@ the reference serves `orc-tools meta` from `Footer.statistics`
 Two implementations:
 
 - `footer_column_stats` (the query path): DISTRIBUTED — executors
-  parse file tails with the pure-Python parser (`footer_tail.py`,
-  shipped to workers via addPyFile) emitting typed per-file partial
+  parse file tails with the pure-Python parser (`footer_tail.py`)
+  emitting typed per-file partial
   rows, and Spark performs the final merge (min of mins, max of maxes,
   sum of sums, OR of hasNull) — the exact partial/final design of the
   reference's `ColumnStatisticsImpl.merge()`. One tail-read per file,
@@ -21,11 +21,15 @@ from __future__ import annotations
 
 import glob
 import os
+from datetime import date, datetime, timedelta
 from decimal import Decimal
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from orc_release_hdp_2_6_5_99_1_tag_spark.session import ship_engine
+from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail as ft
 
 _INT_KINDS = ("tinyint", "smallint", "int", "bigint")
 _STRLIKE_KINDS = ("string", "char", "varchar")
@@ -51,81 +55,68 @@ def _orc_files(path: str) -> list[str]:
     )
 
 
-def _make_tail_mapper():
-    """mapInPandas closure: one typed partial-stats row per (file,
-    top-level column). Self-contained: imports `footer_tail` shipped
-    via addPyFile (executors don't have this repo on sys.path)."""
+def _render_ts(ms: int | None) -> str | None:
+    if ms is None:
+        return None
+    s, frac = divmod(ms, 1000)
+    t = datetime(1970, 1, 1) + timedelta(seconds=s)
+    # %Y does not zero-pad years < 1000 (glibc), which would break the
+    # lexicographic cross-file min/max merge — pad every component
+    # explicitly
+    out = (
+        f"{t.year:04d}-{t.month:02d}-{t.day:02d}"
+        f" {t.hour:02d}:{t.minute:02d}:{t.second:02d}"
+    )
+    if frac:
+        out += ("." + f"{frac:03d}").rstrip("0")
+    return out
 
-    def tails_to_partials(batches):
-        from datetime import date, datetime, timedelta
 
-        import pandas as pd
-
-        try:
-            from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail as ft
-        except ImportError:  # executor: module shipped flat via addPyFile
-            import footer_tail as ft
-
-        def render_ts(ms: int | None) -> str | None:
-            if ms is None:
-                return None
-            s, frac = divmod(ms, 1000)
-            t = datetime(1970, 1, 1) + timedelta(seconds=s)
-            # %Y does not zero-pad years < 1000 (glibc), which would
-            # break the lexicographic cross-file min/max merge — pad
-            # every component explicitly
-            out = (
-                f"{t.year:04d}-{t.month:02d}-{t.day:02d}"
-                f" {t.hour:02d}:{t.minute:02d}:{t.second:02d}"
-            )
-            if frac:
-                out += ("." + f"{frac:03d}").rstrip("0")
-            return out
-
-        cols = [c.split()[0] for c in _PARTIAL_SCHEMA.split(",")]
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                tail = ft.parse_tail_of_file(path)
-                for c in tail["columns"]:
-                    t = c.get("typed", {})
-                    kind = c["kind"]
-                    r = dict.fromkeys(cols)
-                    r.update(
-                        column_name=c["name"],
-                        kind=kind,
-                        n_values=int(c.get("n_values", 0)),
-                        has_null=bool(c.get("has_null", False)),
-                        sum_long_defined=True,
-                    )
-                    if kind in _INT_KINDS:
-                        r["min_long"], r["max_long"] = t.get("min"), t.get("max")
-                        r["sum_long"] = t.get("sum")
-                        # reference omits the int sum on overflow
-                        r["sum_long_defined"] = "sum" in t
-                    elif kind in ("float", "double"):
-                        r["min_dbl"], r["max_dbl"] = t.get("min"), t.get("max")
-                        r["sum_dbl"] = t.get("sum")
-                    elif kind in _STRLIKE_KINDS:
-                        r["min_str"], r["max_str"] = t.get("min"), t.get("max")
-                    elif kind == "decimal":
-                        r["min_dec"], r["max_dec"] = t.get("min"), t.get("max")
-                        r["sum_dec"] = t.get("sum")
-                    elif kind == "boolean":
-                        r["true_count"] = t.get("true_count", 0)
-                    elif kind == "date":
-                        for k in ("min", "max"):
-                            if t.get(k) is not None:
-                                r[f"{k}_str"] = str(date(1970, 1, 1) + timedelta(days=t[k]))
-                    elif kind == "timestamp":
-                        r["min_str"] = render_ts(t.get("min_utc", t.get("min")))
-                        r["max_str"] = render_ts(t.get("max_utc", t.get("max")))
-                    elif kind == "binary":
-                        r["sum_long"] = t.get("sum")
-                    rows.append(r)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tails_to_partials
+def _tails_to_partials(batches):
+    """mapInPandas function: one typed partial-stats row per (file,
+    top-level column)."""
+    cols = [c.split()[0] for c in _PARTIAL_SCHEMA.split(",")]
+    for pdf in batches:
+        rows = []
+        for path in pdf["path"]:
+            tail = ft.parse_tail_of_file(path)
+            for c in tail["columns"]:
+                t = c.get("typed", {})
+                kind = c["kind"]
+                r = dict.fromkeys(cols)
+                r.update(
+                    column_name=c["name"],
+                    kind=kind,
+                    n_values=int(c.get("n_values", 0)),
+                    has_null=bool(c.get("has_null", False)),
+                    sum_long_defined=True,
+                )
+                if kind in _INT_KINDS:
+                    r["min_long"], r["max_long"] = t.get("min"), t.get("max")
+                    r["sum_long"] = t.get("sum")
+                    # reference omits the int sum on overflow
+                    r["sum_long_defined"] = "sum" in t
+                elif kind in ("float", "double"):
+                    r["min_dbl"], r["max_dbl"] = t.get("min"), t.get("max")
+                    r["sum_dbl"] = t.get("sum")
+                elif kind in _STRLIKE_KINDS:
+                    r["min_str"], r["max_str"] = t.get("min"), t.get("max")
+                elif kind == "decimal":
+                    r["min_dec"], r["max_dec"] = t.get("min"), t.get("max")
+                    r["sum_dec"] = t.get("sum")
+                elif kind == "boolean":
+                    r["true_count"] = t.get("true_count", 0)
+                elif kind == "date":
+                    for k in ("min", "max"):
+                        if t.get(k) is not None:
+                            r[f"{k}_str"] = str(date(1970, 1, 1) + timedelta(days=t[k]))
+                elif kind == "timestamp":
+                    r["min_str"] = _render_ts(t.get("min_utc", t.get("min")))
+                    r["max_str"] = _render_ts(t.get("max_utc", t.get("max")))
+                elif kind == "binary":
+                    r["sum_long"] = t.get("sum")
+                rows.append(r)
+        yield pd.DataFrame(rows, columns=cols)
 
 
 def _strip_dec(col):
@@ -146,12 +137,10 @@ def footer_column_stats(spark: SparkSession, path: str) -> DataFrame:
     files = sorted(set(_orc_files(path)))
     if not files:
         raise FileNotFoundError(f"no ORC files under {path}")
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail
-
-    spark.sparkContext.addPyFile(footer_tail.__file__)
+    ship_engine(spark)
     fdf = spark.createDataFrame([(f,) for f in files], "path string")
     partials = fdf.repartition(min(len(files), 64)).mapInPandas(
-        _make_tail_mapper(), schema=_PARTIAL_SCHEMA
+        _tails_to_partials, schema=_PARTIAL_SCHEMA
     )
     merged = partials.groupBy("column_name", "kind").agg(
         F.sum("n_values").alias("n_values"),
@@ -307,84 +296,72 @@ _RG_SCHEMA = (
 )
 
 
-def _make_rowindex_mapper():
-    """mapInPandas closure: one row per (file, column, row group) with
+def _files_to_rowgroups(batches):
+    """mapInPandas function: one row per (file, column, row group) with
     the RowIndexEntry statistics (`OrcProto.RowIndexEntry`:
     positions=1, statistics=2 — proto/orc_proto.proto:84-91, surfaced
     by `orc-tools meta --withIndex`, read by
-    `RecordReaderImpl.readRowIndex`). Self-contained for addPyFile
-    shipping, like the file-stats mapper above.
+    `RecordReaderImpl.readRowIndex`).
 
     start_row / rows_in_group come from stripe geometry (stripe row
     offsets + the footer's rowIndexStride), NOT from the entry's
     n_values — numberOfValues counts non-null values, so geometry is
     the only null-safe way to place a group in the file's row space."""
-
-    def files_to_rowgroups(batches):
-        import pandas as pd
-
-        try:
-            from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail as ft
-        except ImportError:  # executor: module shipped flat via addPyFile
-            import footer_tail as ft
-
-        cols = [
-            "path", "column_name", "stripe_idx", "group_idx", "group_ord",
-            "start_row", "rows_in_group", "n_values", "has_null",
-            "min_val", "max_val",
-        ]  # fmt: skip
-        for pdf in batches:
-            rows = []
-            for path, cols_csv in zip(pdf["path"], pdf["cols"]):
-                tail = ft.parse_tail_of_file(path)
-                ids = {c["name"]: c["col_id"] for c in tail["columns"]}
-                stride = tail["row_index_stride"]
-                if not stride:
-                    # orc.create.index=false / stride 0: no row-group
-                    # geometry exists — zero silent rows or garbage
-                    # start_row arithmetic would both be wrong answers
-                    raise ValueError(
-                        f"{path}: rowIndexStride=0 (written without row "
-                        f"indexes); row-group statistics are undefined"
+    cols = [
+        "path", "column_name", "stripe_idx", "group_idx", "group_ord",
+        "start_row", "rows_in_group", "n_values", "has_null",
+        "min_val", "max_val",
+    ]  # fmt: skip
+    for pdf in batches:
+        rows = []
+        for path, cols_csv in zip(pdf["path"], pdf["cols"]):
+            tail = ft.parse_tail_of_file(path)
+            ids = {c["name"]: c["col_id"] for c in tail["columns"]}
+            stride = tail["row_index_stride"]
+            if not stride:
+                # orc.create.index=false / stride 0: no row-group
+                # geometry exists — zero silent rows or garbage
+                # start_row arithmetic would both be wrong answers
+                raise ValueError(
+                    f"{path}: rowIndexStride=0 (written without row "
+                    f"indexes); row-group statistics are undefined"
+                )
+            stripes = ft.parse_stripe_footers(path)
+            for cname in cols_csv.split(","):
+                if cname not in ids:
+                    raise KeyError(
+                        f"column {cname!r} not in {path}: {sorted(ids)}"
                     )
-                stripes = ft.parse_stripe_footers(path)
-                for cname in cols_csv.split(","):
-                    if cname not in ids:
-                        raise KeyError(
-                            f"column {cname!r} not in {path}: {sorted(ids)}"
-                        )
-                    per_stripe = ft.parse_row_index(path, ids[cname])
-                    if any(not entries for entries in per_stripe):
-                        raise ValueError(
-                            f"{path}: column {cname!r} has a stripe with no "
-                            f"RowIndexEntry despite rowIndexStride={stride}"
-                        )
-                    row_offset = 0
-                    g_ord = 0
-                    for s_idx, (st, entries) in enumerate(zip(stripes, per_stripe)):
-                        for g_idx, e in enumerate(entries):
-                            typed = e.get("typed", {})
-                            mn, mx = typed.get("min"), typed.get("max")
-                            rows.append(
-                                (
-                                    path,
-                                    cname,
-                                    s_idx,
-                                    g_idx,
-                                    g_ord,
-                                    row_offset + g_idx * stride,
-                                    min(stride, st["numberOfRows"] - g_idx * stride),
-                                    e.get("n_values", 0),
-                                    bool(e.get("has_null")),
-                                    None if mn is None else str(mn),
-                                    None if mx is None else str(mx),
-                                )
+                per_stripe = ft.parse_row_index(path, ids[cname])
+                if any(not entries for entries in per_stripe):
+                    raise ValueError(
+                        f"{path}: column {cname!r} has a stripe with no "
+                        f"RowIndexEntry despite rowIndexStride={stride}"
+                    )
+                row_offset = 0
+                g_ord = 0
+                for s_idx, (st, entries) in enumerate(zip(stripes, per_stripe)):
+                    for g_idx, e in enumerate(entries):
+                        typed = e.get("typed", {})
+                        mn, mx = typed.get("min"), typed.get("max")
+                        rows.append(
+                            (
+                                path,
+                                cname,
+                                s_idx,
+                                g_idx,
+                                g_ord,
+                                row_offset + g_idx * stride,
+                                min(stride, st["numberOfRows"] - g_idx * stride),
+                                e.get("n_values", 0),
+                                bool(e.get("has_null")),
+                                None if mn is None else str(mn),
+                                None if mx is None else str(mx),
                             )
-                            g_ord += 1
-                        row_offset += st["numberOfRows"]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files_to_rowgroups
+                        )
+                        g_ord += 1
+                    row_offset += st["numberOfRows"]
+        yield pd.DataFrame(rows, columns=cols)
 
 
 def rowgroup_stats(spark: SparkSession, path: str, columns: list[str]) -> DataFrame:
@@ -402,11 +379,9 @@ def rowgroup_stats(spark: SparkSession, path: str, columns: list[str]) -> DataFr
     files = sorted(set(_orc_files(path)))
     if not files:
         raise FileNotFoundError(f"no ORC files under {path}")
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail
-
-    spark.sparkContext.addPyFile(footer_tail.__file__)
+    ship_engine(spark)
     cols_csv = ",".join(columns)
     fdf = spark.createDataFrame([(f, cols_csv) for f in files], "path string, cols string")
     return fdf.repartition(min(len(files), 64)).mapInPandas(
-        _make_rowindex_mapper(), schema=_RG_SCHEMA
+        _files_to_rowgroups, schema=_RG_SCHEMA
     )

@@ -8,8 +8,8 @@ scanning rows (`ColumnStatisticsImpl.java`, `Footer.statistics`). Spark
 4's ORC scan doesn't expose aggregate pushdown to Python, so we read
 footers directly with pyarrow.orc on the driver — file tails only, no
 data pages; at 100 TB this is one tail-read per file and should be
-distributed (mapPartitions over file lists) — `orc_meta_distributed`
-does exactly that.
+distributed (mapInPandas over file lists) — `orc_meta_distributed`
+does exactly that, with the same per-file reader.
 """
 
 from __future__ import annotations
@@ -18,6 +18,8 @@ import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from orc_release_hdp_2_6_5_99_1_tag_spark.session import ship_engine
 
 
 def _orc_files(path: str) -> list[str]:
@@ -31,47 +33,50 @@ def _orc_files(path: str) -> list[str]:
     )
 
 
-def _file_meta_rows(path: str) -> list[dict]:
-    """Per-file footer facts (schema, rows, stripes, compression)."""
+_META_SCHEMA = (
+    "file string, nrows long, nstripes long, compression string,"
+    " compression_size long, row_index_stride long, writer string,"
+    " content_length long, ncolumns int"
+)
+_META_COLUMNS = [c.split()[0] for c in _META_SCHEMA.split(",")]
+
+
+def _file_meta_row(f: str) -> dict:
+    """One file's footer facts (schema, rows, stripes, compression)."""
     from pyarrow import orc as pa_orc
 
-    rows = []
-    for f in sorted(set(_orc_files(path))):
-        o = pa_orc.ORCFile(f)
-        rows.append(
-            {
-                "file": os.path.basename(f),
-                "nrows": int(o.nrows),
-                "nstripes": int(o.nstripes),
-                "compression": str(o.compression),
-                "compression_size": int(o.compression_size),
-                "row_index_stride": int(o.row_index_stride),
-                "writer": str(o.writer),
-                "content_length": int(o.content_length),
-                "ncolumns": len(o.schema),
-            }
+    o = pa_orc.ORCFile(f)
+    return {
+        "file": os.path.basename(f),
+        "nrows": int(o.nrows),
+        "nstripes": int(o.nstripes),
+        "compression": str(o.compression),
+        "compression_size": int(o.compression_size),
+        "row_index_stride": int(o.row_index_stride),
+        "writer": str(o.writer),
+        "content_length": int(o.content_length),
+        "ncolumns": len(o.schema),
+    }
+
+
+def _file_meta_rows(path: str) -> list[dict]:
+    """Per-file footer facts for every ORC file under `path`."""
+    return [_file_meta_row(f) for f in sorted(set(_orc_files(path)))]
+
+
+def _read_tails(batches):
+    """mapInPandas function: `_file_meta_row` per listed file."""
+    import pandas as pd
+
+    for pdf in batches:
+        yield pd.DataFrame(
+            [_file_meta_row(f) for f in pdf["path"]], columns=_META_COLUMNS
         )
-    return rows
 
 
 def orc_meta(spark: SparkSession, path: str) -> DataFrame:
     """`orc-tools meta` as a DataFrame (driver-side tail reads)."""
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("file", T.StringType()),
-            T.StructField("nrows", T.LongType()),
-            T.StructField("nstripes", T.LongType()),
-            T.StructField("compression", T.StringType()),
-            T.StructField("compression_size", T.LongType()),
-            T.StructField("row_index_stride", T.LongType()),
-            T.StructField("writer", T.StringType()),
-            T.StructField("content_length", T.LongType()),
-            T.StructField("ncolumns", T.IntegerType()),
-        ]
-    )
-    return spark.createDataFrame(_file_meta_rows(path), schema)
+    return spark.createDataFrame(_file_meta_rows(path), _META_SCHEMA)
 
 
 def orc_meta_distributed(spark: SparkSession, path: str) -> DataFrame:
@@ -80,55 +85,10 @@ def orc_meta_distributed(spark: SparkSession, path: str) -> DataFrame:
     files = sorted(set(_orc_files(path)))
     if not files:
         return orc_meta(spark, path)
-
-    # self-contained closure: executors do not have this repo on their
-    # import path, so the tail-reading logic is inlined (pickled by value)
-    def read_tails(it):
-        import os as _os
-
-        import pandas as pd
-        from pyarrow import orc as pa_orc
-
-        for pdf in it:
-            out = []
-            for f in pdf["path"]:
-                o = pa_orc.ORCFile(f)
-                out.append(
-                    {
-                        "file": _os.path.basename(f),
-                        "nrows": int(o.nrows),
-                        "nstripes": int(o.nstripes),
-                        "compression": str(o.compression),
-                        "compression_size": int(o.compression_size),
-                        "row_index_stride": int(o.row_index_stride),
-                        "writer": str(o.writer),
-                        "content_length": int(o.content_length),
-                        "ncolumns": len(o.schema),
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "file",
-                    "nrows",
-                    "nstripes",
-                    "compression",
-                    "compression_size",
-                    "row_index_stride",
-                    "writer",
-                    "content_length",
-                    "ncolumns",
-                ],
-            )
-
+    ship_engine(spark)
     fdf = spark.createDataFrame([(f,) for f in files], "path string")
     return fdf.repartition(min(len(files), 32)).mapInPandas(
-        read_tails,
-        schema=(
-            "file string, nrows long, nstripes long, compression string,"
-            " compression_size long, row_index_stride long, writer string,"
-            " content_length long, ncolumns int"
-        ),
+        _read_tails, schema=_META_SCHEMA
     )
 
 

@@ -24,17 +24,58 @@ DataFrame (CREATE TABLE ... USING orc_meta parses, but this Spark
 build does not forward DDL OPTIONS to Python sources — pinned in
 tests/test_python_datasource.py).
 
-Worker-shipping contract (same as footer_stats): external drivers run
-vanilla sessions whose Python workers do NOT have this repo on
-sys.path, so (a) `footer_tail` is shipped flat via addPyFile and
-imported with a flat fallback, and (b) the DataSource class itself is
-defined INSIDE the registration function so cloudpickle serializes it
-BY VALUE instead of by module reference (a module-level class would
-unpickle as `import orc_release_hdp_2_6_5_99_1_tag_spark...` on the
-worker and fail).
+Worker shipping: every `register_*` below calls `session.ship_engine`,
+and workers import this module by its package name. The DataSource,
+reader and writer classes live at module level and pickle by
+reference, so module state such as `_ELECTION_CACHE` persists in a
+reused Python worker across loads. The one exception is the stream
+source, which ships by value (`sources/synthetic_events.py` says why).
 """
 
 from __future__ import annotations
+
+import datetime as dt
+import glob
+import hashlib
+import json
+import os
+import tempfile
+import uuid
+from dataclasses import dataclass
+
+import pyarrow as pa
+from pyspark import TaskContext, cloudpickle
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceWriter,
+    EqualNullSafe,
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
+    InputPartition,
+    IsNotNull,
+    IsNull,
+    LessThan,
+    LessThanOrEqual,
+    Not,
+    WriterCommitMessage,
+)
+
+from orc_release_hdp_2_6_5_99_1_tag_spark.session import ship_engine
+from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail as ft
+from orc_release_hdp_2_6_5_99_1_tag_spark.sources import synthetic_events
+from orc_release_hdp_2_6_5_99_1_tag_spark.sources.synthetic_events import (
+    SYNTH_BATCH,  # re-exported: the stream's public names live here too
+    SYNTH_N,
+    SyntheticEventsSource,
+)
+from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
+    _column_ids,
+    _included_ids,
+    output_columns,
+)
 
 SCHEMA = (
     "file string, stripe_idx int, column_name string, kind string, "
@@ -45,323 +86,237 @@ SCHEMA = (
 )
 
 # orc_native reader-schema election memo, shared across .load() calls
-# on the DRIVER (planning is driver-side by the DataSource contract):
-# (path, force_positional) -> (file-list digest,
-# (elected path, elected tail parse)). Invalidated by any change to
-# the file list or a file's mtime/size; each entry is O(1), never
-# O(files).
+# within one planner process (a reused Python worker under Spark, the
+# driver when a test calls schema() directly): (path, force_positional)
+# -> (file-list digest, (elected path, elected tail parse)). Invalidated
+# by any change to the file list or a file's mtime/size; each entry is
+# O(1), never O(files).
 _ELECTION_CACHE: dict[tuple[str, bool], tuple[str, tuple[str, dict]]] = {}
 
 
-def _build_datasource_class():
-    """Factory: the class is created in FUNCTION scope so cloudpickle
-    ships its code to workers by value (see module docstring)."""
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
-    )
+def _orc_paths(path: str) -> list[str]:
+    """The `*.orc` files directly under `path`; raises when there are
+    none."""
+    files = sorted(glob.glob(os.path.join(path, "*.orc")))
+    if not files:
+        raise FileNotFoundError(f"no .orc files under {path}")
+    return files
 
-    schema_str = SCHEMA
 
-    class OrcMetaReader(DataSourceReader):
-        def __init__(self, options: dict):
-            path = options.get("path")
-            if not path:
-                raise ValueError(
-                    "orc_meta requires .option('path', <orc dir>)"
+class OrcMetaReader(DataSourceReader):
+    def __init__(self, options: dict):
+        path = options.get("path")
+        if not path:
+            raise ValueError(
+                "orc_meta requires .option('path', <orc dir>)"
+            )
+        self._path = path
+
+    def partitions(self):
+        # DRIVER-side: file LISTING only (no parsing) — 1 task/file
+        return [InputPartition(f) for f in _orc_paths(self._path)]
+
+    def read(self, partition):
+        # EXECUTOR-side: ranged tail reads via the pure-Python parser.
+        # Emits ONE pyarrow.RecordBatch per file instead of per-row
+        # tuples (supported by the Spark 4 Python DataSource read
+        # contract): the (file × stripes × columns) fan-out crosses the
+        # Python→JVM boundary as one Arrow buffer, not len(rows)
+        # pickled tuples — the same row-exchange ceiling the round-9
+        # verdict flagged on r12 (measured delta recorded in SCALE.md
+        # §Python DataSource)
+        path = partition.value
+        tail = ft.parse_tail_of_file(path, include_stripe_stats=True)
+        stripes = ft.parse_stripe_footers(path)
+        names = [c["name"] for c in tail["columns"]]
+        kinds = [c["kind"] for c in tail["columns"]]
+        fname = os.path.basename(path)
+        cols: dict[str, list] = {k: [] for k in (
+            "file", "stripe_idx", "column_name", "kind", "n_values",
+            "has_null", "min_val", "max_val", "n_rows_stripe",
+            "stripe_offset", "index_length", "n_cols", "compression",
+            "row_index_stride", "writer_version",
+        )}
+        for s_idx, st in enumerate(stripes):
+            per_col = (
+                tail["stripe_stats"][s_idx]
+                if tail.get("stripe_stats")
+                else []
+            )
+            for c_idx, cname in enumerate(names):
+                # stripe_stats index 0 is the root struct
+                stats = (
+                    per_col[c_idx + 1]
+                    if len(per_col) > c_idx + 1
+                    else {}
                 )
-            self._path = path
+                typed = stats.get("typed") or {}
+                mn, mx = typed.get("min"), typed.get("max")
+                cols["file"].append(fname)
+                cols["stripe_idx"].append(s_idx)
+                cols["column_name"].append(cname)
+                cols["kind"].append(kinds[c_idx])
+                cols["n_values"].append(stats.get("n_values"))
+                cols["has_null"].append(stats.get("has_null"))
+                cols["min_val"].append(None if mn is None else str(mn))
+                cols["max_val"].append(None if mx is None else str(mx))
+                cols["n_rows_stripe"].append(st["numberOfRows"])
+                cols["stripe_offset"].append(st["offset"])
+                cols["index_length"].append(st["indexLength"])
+                cols["n_cols"].append(len(names))
+                cols["compression"].append(tail["compression"])
+                cols["row_index_stride"].append(tail["row_index_stride"])
+                cols["writer_version"].append(tail["writer_version"])
+        arrow_schema = pa.schema([
+            ("file", pa.string()), ("stripe_idx", pa.int32()),
+            ("column_name", pa.string()), ("kind", pa.string()),
+            ("n_values", pa.int64()), ("has_null", pa.bool_()),
+            ("min_val", pa.string()), ("max_val", pa.string()),
+            ("n_rows_stripe", pa.int64()), ("stripe_offset", pa.int64()),
+            ("index_length", pa.int64()), ("n_cols", pa.int32()),
+            ("compression", pa.string()),
+            ("row_index_stride", pa.int32()),
+            ("writer_version", pa.int32()),
+        ])  # fmt: skip
+        yield pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
 
-        def partitions(self):
-            # DRIVER-side: file LISTING only (no parsing) — 1 task/file
-            import glob
-            import os
 
-            files = sorted(glob.glob(os.path.join(self._path, "*.orc")))
-            if not files:
-                raise FileNotFoundError(f"no .orc files under {self._path}")
-            return [InputPartition(f) for f in files]
+class OrcMetaDataSource(DataSource):
+    @classmethod
+    def name(cls) -> str:
+        return "orc_meta"
 
-        def read(self, partition):
-            # EXECUTOR-side: ranged tail reads via the pure-Python
-            # parser, shipped flat via addPyFile by register_orc_meta.
-            # Emits ONE pyarrow.RecordBatch per file instead of
-            # per-row tuples (supported by the Spark 4 Python
-            # DataSource read contract): the (file × stripes ×
-            # columns) fan-out crosses the Python→JVM boundary as one
-            # Arrow buffer, not len(rows) pickled tuples — the same
-            # row-exchange ceiling the round-9 verdict flagged on r12
-            # (measured delta recorded in SCALE.md §Python DataSource)
-            import os
+    def schema(self) -> str:
+        return SCHEMA
 
-            import pyarrow as pa
-
-            try:
-                from orc_release_hdp_2_6_5_99_1_tag_spark.sources import (
-                    footer_tail as ft,
-                )
-            except ImportError:  # vanilla-session worker: flat module
-                import footer_tail as ft
-
-            path = partition.value
-            tail = ft.parse_tail_of_file(path, include_stripe_stats=True)
-            stripes = ft.parse_stripe_footers(path)
-            names = [c["name"] for c in tail["columns"]]
-            kinds = [c["kind"] for c in tail["columns"]]
-            fname = os.path.basename(path)
-            cols: dict[str, list] = {k: [] for k in (
-                "file", "stripe_idx", "column_name", "kind", "n_values",
-                "has_null", "min_val", "max_val", "n_rows_stripe",
-                "stripe_offset", "index_length", "n_cols", "compression",
-                "row_index_stride", "writer_version",
-            )}
-            for s_idx, st in enumerate(stripes):
-                per_col = (
-                    tail["stripe_stats"][s_idx]
-                    if tail.get("stripe_stats")
-                    else []
-                )
-                for c_idx, cname in enumerate(names):
-                    # stripe_stats index 0 is the root struct
-                    stats = (
-                        per_col[c_idx + 1]
-                        if len(per_col) > c_idx + 1
-                        else {}
-                    )
-                    typed = stats.get("typed") or {}
-                    mn, mx = typed.get("min"), typed.get("max")
-                    cols["file"].append(fname)
-                    cols["stripe_idx"].append(s_idx)
-                    cols["column_name"].append(cname)
-                    cols["kind"].append(kinds[c_idx])
-                    cols["n_values"].append(stats.get("n_values"))
-                    cols["has_null"].append(stats.get("has_null"))
-                    cols["min_val"].append(None if mn is None else str(mn))
-                    cols["max_val"].append(None if mx is None else str(mx))
-                    cols["n_rows_stripe"].append(st["numberOfRows"])
-                    cols["stripe_offset"].append(st["offset"])
-                    cols["index_length"].append(st["indexLength"])
-                    cols["n_cols"].append(len(names))
-                    cols["compression"].append(tail["compression"])
-                    cols["row_index_stride"].append(tail["row_index_stride"])
-                    cols["writer_version"].append(tail["writer_version"])
-            arrow_schema = pa.schema([
-                ("file", pa.string()), ("stripe_idx", pa.int32()),
-                ("column_name", pa.string()), ("kind", pa.string()),
-                ("n_values", pa.int64()), ("has_null", pa.bool_()),
-                ("min_val", pa.string()), ("max_val", pa.string()),
-                ("n_rows_stripe", pa.int64()), ("stripe_offset", pa.int64()),
-                ("index_length", pa.int64()), ("n_cols", pa.int32()),
-                ("compression", pa.string()),
-                ("row_index_stride", pa.int32()),
-                ("writer_version", pa.int32()),
-            ])  # fmt: skip
-            yield pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
-
-    class OrcMetaDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "orc_meta"
-
-        def schema(self) -> str:
-            return schema_str
-
-        def reader(self, schema) -> OrcMetaReader:
-            return OrcMetaReader(self.options)
-
-    return OrcMetaDataSource
+    def reader(self, schema) -> OrcMetaReader:
+        return OrcMetaReader(self.options)
 
 
 def register_orc_meta(spark) -> None:
-    """Idempotent per-session registration: ships footer_tail flat to
-    the workers (addPyFile is a no-op on re-add of the same path) and
-    registers the by-value-pickled DataSource class (re-register
-    replaces, matching spark.udtf.register semantics)."""
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail
-
-    spark.sparkContext.addPyFile(footer_tail.__file__)
-    spark.dataSource.register(_build_datasource_class())
+    """Idempotent per-session registration: ships the engine to the
+    workers and registers the DataSource (re-register replaces,
+    matching spark.udtf.register semantics)."""
+    ship_engine(spark)
+    spark.dataSource.register(OrcMetaDataSource)
 
 
 # ---------------------------------------------------------------------------
-# synthetic_events — a Python STREAMING data source (the stream half of
+# synthetic_events — the Python STREAMING data source (the stream half of
 # the source-plugin surface; the batch half is orc_meta above)
 # ---------------------------------------------------------------------------
 
-SYNTH_N = 9000       # total rows the source emits
-SYNTH_BATCH = 3000   # rows per micro-batch (offset advance)
-
-
-def _build_stream_source_class():
-    """Factory (by-value pickling, see module docstring): a
-    deterministic offset-tracked stream source — rows are pure
-    arithmetic over the row id, so an exactly-once sink is
-    recomputable by any SQL engine with generate_series. The offset
-    is {"pos": next_row_id}; `read` advances one batch,
-    `readBetweenOffsets` replays a committed range (failure
-    recovery), and the source is FINITE (read at the end returns an
-    empty iterator with an unmoved offset, making extra availableNow
-    runs idempotent — the property r12 grades)."""
-    from pyspark.sql.datasource import (
-        DataSource,
-        SimpleDataSourceStreamReader,
-    )
-
-    n_total, batch = SYNTH_N, SYNTH_BATCH
-
-    def rows(lo: int, hi: int):
-        # a LIST iterator, not a generator: the engine's prefetch
-        # cache copy.copy()s the batch iterator when planning
-        # partitions (datasource_internal.getCache), and generators
-        # cannot be pickled/copied. The list holds ONE Arrow
-        # RecordBatch instead of (hi-lo) tuples — the whole
-        # micro-batch crosses Python→JVM as a single Arrow buffer
-        # (round-9 verdict "Next #3"; measured delta in SCALE.md)
-        import pyarrow as pa
-
-        ids = list(range(lo, hi))
-        rb = pa.RecordBatch.from_pydict(
-            {
-                "id": ids,
-                "bucket": [i % 7 for i in ids],
-                "amount": [(i * 31) % 1000 for i in ids],
-            },
-            schema=pa.schema(
-                [
-                    ("id", pa.int64()),
-                    ("bucket", pa.int32()),
-                    ("amount", pa.int64()),
-                ]
-            ),
-        )
-        return iter([rb])
-
-    class SyntheticEventsReader(SimpleDataSourceStreamReader):
-        def initialOffset(self):
-            return {"pos": 0}
-
-        def read(self, start):
-            pos = start["pos"]
-            if pos >= n_total:
-                return iter([]), start
-            end = min(pos + batch, n_total)
-            return rows(pos, end), {"pos": end}
-
-        def readBetweenOffsets(self, start, end):
-            return rows(start["pos"], end["pos"])
-
-    class SyntheticEventsSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "synthetic_events"
-
-        def schema(self) -> str:
-            return "id bigint, bucket int, amount bigint"
-
-        def simpleStreamReader(self, schema):
-            return SyntheticEventsReader()
-
-    return SyntheticEventsSource
-
 
 def register_synthetic_events(spark) -> None:
-    spark.dataSource.register(_build_stream_source_class())
+    """Registers the stream source pickled BY VALUE (see
+    `sources/synthetic_events.py`: Spark's streaming-source worker
+    does not see the shipped zip)."""
+    ship_engine(spark)
+    cloudpickle.register_pickle_by_value(synthetic_events)
+    spark.dataSource.register(SyntheticEventsSource)
 
 
 # ---------------------------------------------------------------------------
-# jsonl_sink — a Python DataSource WRITER (the write half of the plugin
+# Sinks — Python DataSource WRITERS (the write half of the plugin
 # surface; reference analog: the pluggable PhysicalWriter +
 # WriterCallback hooks, PhysicalWriter.java / WriterImpl.flushStripe)
 # ---------------------------------------------------------------------------
 
 
-def _build_jsonl_sink_class():
-    """Factory (by-value pickling): a JSON-lines sink with the full
-    TWO-PHASE task-commit protocol — each task writes to a hidden temp
-    file and returns a WriterCommitMessage; the driver's `commit`
-    atomically renames every temp into its final `part-NNNNN.jsonl`
-    name only after ALL tasks succeeded, and `abort` removes the temps
-    of the tasks that did finish. This is the same
-    write-then-publish discipline the reference implements with
+@dataclass
+class _TaskCommit(WriterCommitMessage):
+    tmp_path: str | None  # None: the task wrote nothing to publish
+    n_rows: int
+
+
+class _TwoPhaseWriter(DataSourceWriter):
+    """The TWO-PHASE task-commit protocol both sinks share: each task
+    writes to a hidden temp file and returns a `_TaskCommit`; the
+    driver's `commit` atomically renames every temp into its final
+    `part-NNNNN<suffix>` name only after ALL tasks succeeded, and
+    `abort` removes the temps of the tasks that did finish. This is the
+    same write-then-publish discipline the reference implements with
     intermediate footers + a final file length (`OrcFile.
     MAX_FILE_LENGTH` side file): readers can never observe a
-    half-written output."""
-    from dataclasses import dataclass
+    half-written output. Subclasses set `fmt` and `suffix` and
+    implement `_write_task`; the `fail_partition` option is a test
+    hook (a deterministic mid-job task failure)."""
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceWriter,
-        WriterCommitMessage,
-    )
+    fmt = ""
+    suffix = ""
 
-    @dataclass
-    class JsonlCommit(WriterCommitMessage):
-        tmp_path: str
-        n_rows: int
+    def __init__(self, options: dict):
+        path = options.get("path")
+        if not path:
+            raise ValueError(f"{self.fmt} requires .option('path', dir)")
+        self._dir = path
+        self._fail_partition = int(options.get("fail_partition", -1))
 
-    class JsonlWriter(DataSourceWriter):
-        def __init__(self, options: dict):
-            path = options.get("path")
-            if not path:
-                raise ValueError("jsonl_sink requires .option('path', dir)")
-            self._dir = path
-            # test hook: deterministic mid-job task failure
-            self._fail_partition = int(options.get("fail_partition", -1))
+    def _write_task(self, iterator) -> _TaskCommit:
+        raise NotImplementedError
 
-        def write(self, iterator):
-            import json
-            import os
-            import uuid
+    def _new_temp(self) -> str:
+        os.makedirs(self._dir, exist_ok=True)
+        return os.path.join(self._dir, f"_tmp-{uuid.uuid4().hex}{self.suffix}")
 
-            from pyspark import TaskContext
+    def write(self, iterator):
+        pid = TaskContext.get().partitionId()
+        if pid == self._fail_partition:
+            raise RuntimeError(f"injected failure in partition {pid}")
+        return self._write_task(iterator)
 
-            pid = TaskContext.get().partitionId()
-            if pid == self._fail_partition:
-                raise RuntimeError(f"injected failure in partition {pid}")
-            os.makedirs(self._dir, exist_ok=True)
-            tmp = os.path.join(self._dir, f"_tmp-{uuid.uuid4().hex}.jsonl")
-            n = 0
-            with open(tmp, "w") as fh:
-                for row in iterator:
-                    fh.write(json.dumps(row.asDict(), default=str) + "\n")
-                    n += 1
-            return JsonlCommit(tmp_path=tmp, n_rows=n)
-
-        def commit(self, messages):
-            import os
-
-            # publish: atomic renames, deterministic final names
-            for i, m in enumerate(messages):
+    def commit(self, messages):
+        # publish: atomic renames, deterministic final names
+        for i, m in enumerate(messages):
+            if m.tmp_path is not None:
                 os.replace(
-                    m.tmp_path, os.path.join(self._dir, f"part-{i:05d}.jsonl")
+                    m.tmp_path,
+                    os.path.join(self._dir, f"part-{i:05d}{self.suffix}"),
                 )
 
-        def abort(self, messages):
-            import os
+    def abort(self, messages):
+        # a failed task's message is None: it left no finished temp
+        for m in messages:
+            if m is None or m.tmp_path is None:
+                continue
+            try:
+                os.remove(m.tmp_path)
+            except OSError:
+                pass
 
-            for m in messages:
-                try:
-                    os.remove(m.tmp_path)
-                except (FileNotFoundError, OSError):
-                    pass
 
-    class JsonlSinkSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "jsonl_sink"
+class JsonlWriter(_TwoPhaseWriter):
+    """`df.write.format("jsonl_sink")`: one JSON-lines file per task
+    (an empty partition publishes an empty file)."""
 
-        def schema(self) -> str:  # writer-only source; schema unused
-            return "value string"
+    fmt = "jsonl_sink"
+    suffix = ".jsonl"
 
-        def writer(self, schema, overwrite: bool):
-            return JsonlWriter(self.options)
+    def _write_task(self, iterator) -> _TaskCommit:
+        tmp = self._new_temp()
+        n = 0
+        with open(tmp, "w") as fh:
+            for row in iterator:
+                fh.write(json.dumps(row.asDict(), default=str) + "\n")
+                n += 1
+        return _TaskCommit(tmp_path=tmp, n_rows=n)
 
-    return JsonlSinkSource
+
+class JsonlSinkSource(DataSource):
+    @classmethod
+    def name(cls) -> str:
+        return "jsonl_sink"
+
+    def schema(self) -> str:  # writer-only source; schema unused
+        return "value string"
+
+    def writer(self, schema, overwrite: bool):
+        return JsonlWriter(self.options)
 
 
 def register_jsonl_sink(spark) -> None:
-    spark.dataSource.register(_build_jsonl_sink_class())
+    ship_engine(spark)
+    spark.dataSource.register(JsonlSinkSource)
 
 
 # ---------------------------------------------------------------------------
@@ -369,16 +324,15 @@ def register_jsonl_sink(spark) -> None:
 # ---------------------------------------------------------------------------
 
 
-def _build_orc_native_sink_class():
-    """Factory (by-value pickling): `df.write.format("orc_native_sink")`
-    — each task STREAMS its partition to one ORC file through the
-    pure-Python appender (`sources/orc_encode.NativeOrcAppender`,
-    stripe by stripe: RLEv2/byte-RLE/bitfield streams, dictionary
-    cutover, row-group index positions, stats, optional UTF8 blooms),
-    under the same TWO-PHASE commit as jsonl_sink (per-task hidden
-    temps, driver publishes part-NNNNN.orc atomically, abort removes
-    finished temps). The ORC schema derives from the DataFrame schema
-    — no schema option to drift out of sync.
+class OrcNativeWriter(_TwoPhaseWriter):
+    """`df.write.format("orc_native_sink")` — each task STREAMS its
+    partition to one ORC file through the pure-Python appender
+    (`sources/orc_encode.NativeOrcAppender`, stripe by stripe:
+    RLEv2/byte-RLE/bitfield streams, dictionary cutover, row-group
+    index positions, stats, optional UTF8 blooms), under the shared
+    two-phase commit (an empty partition publishes nothing). The ORC
+    schema derives from the DataFrame schema — no schema option to
+    drift out of sync.
 
     Scale: the write is embarrassingly parallel (one file per
     partition, no driver data) and task memory is bounded by ONE
@@ -392,126 +346,80 @@ def _build_orc_native_sink_class():
     Options: path (required), compression (default zlib), stripe_rows,
     row_index_stride, dictionary_key_threshold, bloom_filter_columns
     (comma list), fail_partition (test hook)."""
-    from dataclasses import dataclass
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceWriter,
-        WriterCommitMessage,
-    )
+    fmt = "orc_native_sink"
+    suffix = ".orc"
 
-    @dataclass
-    class OrcCommit(WriterCommitMessage):
-        tmp_path: str | None
-        n_rows: int
+    def __init__(self, options: dict, ddl: str, names: list[str]):
+        super().__init__(options)
+        self._ddl = ddl
+        self._names = names
+        self._comp = options.get("compression", "zlib")
+        self._stripe_rows = int(options.get("stripe_rows", 100_000))
+        self._stride = int(options.get("row_index_stride", 10_000))
+        self._dict_thresh = float(
+            options.get("dictionary_key_threshold", 0.8)
+        )
+        blooms = options.get("bloom_filter_columns", "")
+        self._blooms = tuple(c for c in blooms.split(",") if c)
+        self._version = options.get("version", "0.12")
 
-    class OrcNativeWriter(DataSourceWriter):
-        def __init__(self, options: dict, ddl: str, names: list[str]):
-            path = options.get("path")
-            if not path:
-                raise ValueError("orc_native_sink requires .option('path', dir)")
-            self._dir = path
-            self._ddl = ddl
-            self._names = names
-            self._comp = options.get("compression", "zlib")
-            self._stripe_rows = int(options.get("stripe_rows", 100_000))
-            self._stride = int(options.get("row_index_stride", 10_000))
-            self._dict_thresh = float(
-                options.get("dictionary_key_threshold", 0.8)
-            )
-            blooms = options.get("bloom_filter_columns", "")
-            self._blooms = tuple(c for c in blooms.split(",") if c)
-            self._version = options.get("version", "0.12")
-            self._fail_partition = int(options.get("fail_partition", -1))
+    def _write_task(self, iterator) -> _TaskCommit:
+        from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_encode import (
+            NativeOrcAppender,
+        )
 
-        def write(self, iterator):
-            import os
-            import uuid
+        # STREAM stripe by stripe through the appender: task memory
+        # is bounded by one stripe's rows (the JVM writer's own
+        # memory shape), never the whole partition
+        ap = None
+        tmp = None
+        buf: dict[str, list] = {n: [] for n in self._names}
+        pending = 0
+        total = 0
 
-            from pyspark import TaskContext
-
-            from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_encode import (
-                NativeOrcAppender,
-            )
-
-            pid = TaskContext.get().partitionId()
-            if pid == self._fail_partition:
-                raise RuntimeError(f"injected failure in partition {pid}")
-            # STREAM stripe by stripe through the appender: task memory
-            # is bounded by one stripe's rows (the JVM writer's own
-            # memory shape), never the whole partition
-            ap = None
-            tmp = None
-            buf: dict[str, list] = {n: [] for n in self._names}
+        def _flush():
+            nonlocal ap, tmp, pending, total, buf
+            if ap is None:
+                tmp = self._new_temp()
+                ap = NativeOrcAppender(
+                    tmp, self._ddl,
+                    compression=self._comp,
+                    row_index_stride=self._stride,
+                    dictionary_key_threshold=self._dict_thresh,
+                    bloom_filter_columns=self._blooms,
+                    version=self._version,
+                )  # fmt: skip
+            ap.add_stripe(buf)
+            total += pending
+            buf = {n: [] for n in self._names}
             pending = 0
-            total = 0
 
-            def _flush():
-                nonlocal ap, tmp, pending, total, buf
-                if ap is None:
-                    os.makedirs(self._dir, exist_ok=True)
-                    tmp = os.path.join(
-                        self._dir, f"_tmp-{uuid.uuid4().hex}.orc"
-                    )
-                    ap = NativeOrcAppender(
-                        tmp, self._ddl,
-                        compression=self._comp,
-                        row_index_stride=self._stride,
-                        dictionary_key_threshold=self._dict_thresh,
-                        bloom_filter_columns=self._blooms,
-                        version=self._version,
-                    )  # fmt: skip
-                ap.add_stripe(buf)
-                total += pending
-                buf = {n: [] for n in self._names}
-                pending = 0
-
-            for row in iterator:
-                for name, v in zip(self._names, row):
-                    buf[name].append(v)
-                pending += 1
-                if pending >= self._stripe_rows:
-                    _flush()
-            if pending:
+        for row in iterator:
+            for name, v in zip(self._names, row):
+                buf[name].append(v)
+            pending += 1
+            if pending >= self._stripe_rows:
                 _flush()
-            if ap is None:  # empty partition: publish nothing
-                return OrcCommit(tmp_path=None, n_rows=0)
-            ap.close()
-            return OrcCommit(tmp_path=tmp, n_rows=total)
+        if pending:
+            _flush()
+        if ap is None:  # empty partition: publish nothing
+            return _TaskCommit(tmp_path=None, n_rows=0)
+        ap.close()
+        return _TaskCommit(tmp_path=tmp, n_rows=total)
 
-        def commit(self, messages):
-            import os
 
-            for i, m in enumerate(messages):
-                if m.tmp_path is not None:
-                    os.replace(
-                        m.tmp_path, os.path.join(self._dir, f"part-{i:05d}.orc")
-                    )
+class OrcNativeSinkSource(DataSource):
+    @classmethod
+    def name(cls) -> str:
+        return "orc_native_sink"
 
-        def abort(self, messages):
-            import os
+    def schema(self) -> str:  # writer-only source; schema unused
+        return "value string"
 
-            for m in messages:
-                if m.tmp_path is None:
-                    continue
-                try:
-                    os.remove(m.tmp_path)
-                except (FileNotFoundError, OSError):
-                    pass
-
-    class OrcNativeSinkSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "orc_native_sink"
-
-        def schema(self) -> str:  # writer-only source; schema unused
-            return "value string"
-
-        def writer(self, schema, overwrite: bool):
-            ddl, names = _spark_schema_to_orc_ddl(schema)
-            return OrcNativeWriter(self.options, ddl, names)
-
-    return OrcNativeSinkSource
+    def writer(self, schema, overwrite: bool):
+        ddl, names = _spark_schema_to_orc_ddl(schema)
+        return OrcNativeWriter(self.options, ddl, names)
 
 
 def _spark_schema_to_orc_ddl(schema) -> tuple[str, list[str]]:
@@ -540,13 +448,8 @@ def _spark_schema_to_orc_ddl(schema) -> tuple[str, list[str]]:
 
 
 def register_orc_native_sink(spark) -> None:
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
-        _ship_package,
-    )
-
-    # write() imports orc_encode on the WORKER — ship the package zip
-    _ship_package(spark)
-    spark.dataSource.register(_build_orc_native_sink_class())
+    ship_engine(spark)
+    spark.dataSource.register(OrcNativeSinkSource)
 
 
 # ---------------------------------------------------------------------------
@@ -555,9 +458,352 @@ def register_orc_native_sink(spark) -> None:
 # ---------------------------------------------------------------------------
 
 
-def _build_orc_native_class():
-    """Factory (by-value pickling, see module docstring): `spark.read.
-    format("orc_native")` backed by the pure-Python stream decoder.
+def _pa_type(types, cid, included=None):
+    """ORC type-tree node -> arrow type, recursively — the full
+    include-tree mapping (nested projection is P2, reference
+    `c++/include/orc/Reader.hh:260-281`; `mapred/OrcInputFormat.
+    parseInclude:61-88` resolves the same subtree closure). The
+    composite decoders already produce the matching Python
+    shapes: list -> list, struct -> field dict, map -> (k, v)
+    tuple list, union -> the engine's tagged-struct convention
+    {_tag, f0, f1, ...} (`stream_decode._UnionDecoder`). Unknown
+    future kinds raise, which excludes the column from the
+    default projection."""
+    prim = {
+        "boolean": pa.bool_(), "tinyint": pa.int8(),
+        "smallint": pa.int16(), "int": pa.int32(),
+        "bigint": pa.int64(), "float": pa.float32(),
+        "double": pa.float64(), "date": pa.date32(),
+        "string": pa.string(), "char": pa.string(),
+        "varchar": pa.string(), "binary": pa.binary(),
+        "timestamp": pa.timestamp("us"),
+    }  # fmt: skip
+    t = types[cid]
+    k = t["kind"]
+    if k == "decimal":
+        # v0.11 files carry no precision/scale attributes;
+        # (38, 6) is the reference reader's default
+        p, s = t.get("precision"), t.get("scale")
+        return pa.decimal128(38 if p is None else p, 6 if s is None else s)
+    if k == "list":
+        return pa.list_(_pa_type(types, t["subtypes"][0], included))
+    if k == "map":
+        mk, mv = t["subtypes"]
+        return pa.map_(
+            _pa_type(types, mk, included), _pa_type(types, mv, included)
+        )
+    if k == "struct":
+        # include-pruned, matching the decoder's pruned field dicts
+        return pa.struct(
+            [
+                (fn, _pa_type(types, sub, included))
+                for fn, sub in zip(t["field_names"], t["subtypes"])
+                if included is None or sub in included
+            ]
+        )
+    if k == "union":
+        return pa.struct(
+            [("_tag", pa.int8())]
+            + [
+                (f"f{i}", _pa_type(types, sub, included))
+                for i, sub in enumerate(t["subtypes"])
+            ]
+        )
+    if k in prim:
+        return prim[k]
+    raise ValueError(
+        f"orc_native: ORC kind {k!r} has no arrow mapping"
+    )
+
+
+def _default_columns(meta):
+    """columns option omitted: every top-level column whose type
+    tree the arrow exchange maps (since the nested mapping this
+    is everything except unknown future kinds)."""
+    cols = []
+    for name, cid in _column_ids(meta).items():
+        try:
+            _pa_type(meta["types"], cid)
+        except ValueError:
+            continue
+        cols.append(name)
+    if not cols:
+        kinds = [
+            meta["types"][cid]["kind"] for cid in _column_ids(meta).values()
+        ]
+        raise ValueError(
+            "orc_native: no arrow-mappable top-level columns "
+            f"(kinds: {kinds})"
+        )
+    return cols
+
+
+def _norm_literal(v):
+    """Catalyst hands timestamp literals as TZ-AWARE datetimes
+    (session zone); the SArg stats domain is naive UTC (ORC-135
+    min_utc/max_utc), so rebase — otherwise every aware-vs-naive
+    comparison lands in the SargCastError keep-everything
+    fallback and timestamp PPD silently never prunes."""
+    if isinstance(v, dt.datetime) and v.tzinfo is not None:
+        return v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+    return v
+
+
+def _leaf(f):
+    """One Catalyst Filter -> SArg subtree, or None if this
+    filter cannot prune (it is still applied by Spark). Greater
+    comparisons compose as NOT(lessThan*) — the reference's own
+    builder has no greaterThan leaf (SearchArgumentImpl)."""
+    if isinstance(f, Not):
+        inner = _leaf(f.child)
+        return None if inner is None else ("not", inner)
+    attr = getattr(f, "attribute", None)
+    if not attr:
+        return None
+    # nested field references arrive as multi-part attributes —
+    # join to the engine's dotted-path form (every column id has
+    # its own ROW_INDEX/footer stats, so nested leaves prune like
+    # top-level ones; resolution in tools._resolve_dotted)
+    col = ".".join(attr)
+    if getattr(f, "value", False) is None:
+        return None  # null comparison literals never prune
+    if isinstance(f, EqualTo):
+        return ("equals", col, _norm_literal(f.value))
+    if isinstance(f, EqualNullSafe):
+        return ("null_safe_equals", col, _norm_literal(f.value))
+    if isinstance(f, LessThan):
+        return ("less_than", col, _norm_literal(f.value))
+    if isinstance(f, LessThanOrEqual):
+        return ("less_than_equals", col, _norm_literal(f.value))
+    if isinstance(f, GreaterThan):
+        return ("not", ("less_than_equals", col, _norm_literal(f.value)))
+    if isinstance(f, GreaterThanOrEqual):
+        return ("not", ("less_than", col, _norm_literal(f.value)))
+    if isinstance(f, In):
+        vals = [_norm_literal(v) for v in f.value if v is not None]
+        # a null IN literal can never match a non-null value and
+        # the SArg domain has no null literals (the reference
+        # builder rejects them) — drop nulls, and with nothing
+        # left the leaf cannot prune
+        return ("in", col, vals) if vals else None
+    if isinstance(f, IsNull):
+        return ("is_null", col, None)
+    if isinstance(f, IsNotNull):
+        return ("not", ("is_null", col, None))
+    return None  # String* etc.
+
+
+def _first_meta(options):
+    """ONE driver-side glob + tail parse, shared by schema() and
+    the reader (the arrow schema and default columns are constant
+    across the lake and pickled to every task)."""
+    path = options.get("path")
+    if not path:
+        raise ValueError(
+            "orc_native requires .option('path', <orc dir>)"
+        )
+    files = _orc_paths(path)
+    if _use_side_file(options):
+        files = [_bounded_view(f) for f in files]
+    # evolved lakes (C1): the READER schema is ELECTED — the file
+    # whose schema is a widening-supertype of every other file's
+    # (r11 verdict #2: no caller hint; a lake whose oldest file
+    # predates an added column reads with no option set). The
+    # explicit schema_file option still overrides (a caller with a
+    # catalog skips the tail sweep). DataSource planning is
+    # driver-side by contract, so the election loop is too — one
+    # ranged tail read per file, deduped by schema signature
+    # (evolution_native.elect_reader_path).
+    first = options.get("schema_file")
+    if first:
+        return first, ft.parse_tail_of_file(first)
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import (
+        evolution_native as evo,
+    )
+
+    # election cache ACROSS loads (r12 ADVICE): every .load() makes
+    # a fresh DataSource instance, so the per-instance memo alone
+    # re-runs the O(files) tail sweep per plan. The fingerprint is
+    # a fixed-size DIGEST over the file list + (mtime, size) per
+    # file — any append/compaction/rewrite changes it and
+    # re-elects; an unchanged lake costs one stat() per file
+    # instead of one ranged READ per file, and the retained cache
+    # entry stays O(1) per lake, not O(files).
+    force = _force_positional(options)
+    h = hashlib.sha256()
+    for f in files:
+        st = os.stat(f)
+        h.update(f"{f}\x00{st.st_mtime_ns}\x00{st.st_size}\x00".encode())
+    fp = h.hexdigest()
+    cached = _ELECTION_CACHE.get((path, force))
+    if cached is not None and cached[0] == fp:
+        return cached[1]
+    elected = evo.elect_reader_path(files, force_positional=force)
+    _ELECTION_CACHE[(path, force)] = (fp, elected)
+    return elected
+
+
+def _force_positional(options) -> bool:
+    """The reference's `orc.force.positional.evolution`
+    (`OrcConf.java:141-145`): reconcile file columns with the
+    reader's by INDEX even when the file carries real names
+    (Hive 2.1 compatibility)."""
+    return str(options.get("force_positional", "")).lower() in (
+        "1", "true", "yes",
+    )
+
+
+def _use_side_file(options) -> bool:
+    """`.option("use_side_file", "true")`: readable-while-writing —
+    each file with a `<name>.flush_length` side file is read AS IF
+    it ended at that committed length (the reference's
+    `OrcConf.MAX_FILE_LENGTH:118-121` / `_flush_length` protocol,
+    honored at `ReaderImpl.extractFileTail:515`), so a lake that
+    contains a GROWING appender file (NativeOrcAppender, or any
+    writer publishing intermediate footers) scans its durable
+    prefix and never the torn bytes past it."""
+    return str(options.get("use_side_file", "")).lower() in (
+        "1", "true", "yes",
+    )
+
+
+def _bounded_view(path: str):
+    """The committed [0, flush_length) byte view of a growing
+    file, as a real file the unmodified scan chain reads (the s23
+    materialize-the-prefix discipline, kept out of the shared
+    decode path by design). Cached per (file, bound) — a new
+    publish is a new bound, so repeated polls of an unchanged
+    bound cost one stat; stale bounds of the same file are
+    removed. Files without a side file pass through untouched."""
+    side = path + ".flush_length"
+    if not os.path.exists(side):
+        return path
+    with open(side) as fh:
+        bound = int(fh.read().strip())
+    if bound >= os.path.getsize(path):
+        return path
+    tag = hashlib.sha256(os.path.abspath(path).encode()).hexdigest()[:16]
+    views = os.path.join(tempfile.gettempdir(), "orc_native_views")
+    os.makedirs(views, exist_ok=True)
+    view = os.path.join(views, f"{tag}-{bound}.orc")
+    if not os.path.exists(view):
+        for stale in os.listdir(views):
+            if stale.startswith(f"{tag}-"):
+                try:
+                    os.remove(os.path.join(views, stale))
+                except OSError:
+                    pass
+        tmp = view + ".tmp"
+        with open(path, "rb") as src, open(tmp, "wb") as dst:
+            remaining = bound
+            while remaining > 0:
+                chunk = src.read(min(1 << 20, remaining))
+                if not chunk:
+                    break
+                dst.write(chunk)
+                remaining -= len(chunk)
+        os.replace(tmp, view)
+    return view
+
+
+class OrcNativeReader(DataSourceReader):
+    def __init__(self, options: dict, first=None, meta=None):
+        self._path = options["path"]
+        if meta is None:
+            first, meta = _first_meta(options)
+        cols = options.get("columns")
+        if cols:
+            self._columns = [c.strip() for c in cols.split(",")]
+        else:
+            self._columns = _default_columns(meta)
+        self._audit_dir = options.get("audit_dir")
+        self._force_positional = _force_positional(options)
+        self._use_side = _use_side_file(options)
+        # orc.tolerate.missing.schema parity (OrcConf.java:85-89,
+        # default true): strict mode refuses best-effort positional
+        # reconciliation of pre-HIVE-4243 files at scan time
+        self._tolerate_missing = str(
+            options.get("tolerate_missing_schema", "true")
+        ).lower() not in ("0", "false", "no")
+        self._tree = None  # set by pushFilters
+        self._schema = self._arrow_schema(meta)
+        # the elected reader schema's tail parse ships to every
+        # task: field-level NULL-fill and widening conversions in
+        # scan_file_evolved key off it (evolution_native)
+        self._reader_meta = meta
+
+    def pushFilters(self, filters):
+        leaves = []
+        for f in filters:
+            leaf = _leaf(f)
+            if leaf is not None:
+                leaves.append(leaf)
+            # yield EVERYTHING back: pruning is partial pushdown
+            yield f
+        if len(leaves) == 1:
+            self._tree = leaves[0]
+        elif leaves:
+            self._tree = ("and", *leaves)
+
+    def partitions(self):
+        files = _orc_paths(self._path)
+        if self._use_side:
+            # bounded views are built DRIVER-side (partition
+            # planning), so tasks scan plain complete files
+            files = [_bounded_view(f) for f in files]
+        return [InputPartition(f) for f in files]
+
+    def _arrow_schema(self, meta):
+        ids = _column_ids(meta)
+        # dotted sub-paths (nested projection P2): the schema is
+        # the PRUNED struct per top-level name; _included_ids
+        # raises the clear unknown-column/field error
+        included = _included_ids(meta, self._columns)
+        fields = []
+        for c in output_columns(self._columns, meta):
+            fields.append((c, _pa_type(meta["types"], ids[c], included)))
+        return pa.schema(fields)
+
+    def read(self, partition):
+        from orc_release_hdp_2_6_5_99_1_tag_spark.sources import (
+            stream_decode as m,
+        )
+
+        path = partition.value
+        audit = {"file": os.path.basename(path)}
+        schema = self._schema
+        # the arrow schema's field names ARE the output names
+        # (exact-match-aware; built once on the driver)
+        outs = schema.names
+        for res in m.scan_file_evolved(
+            path, self._tree, self._columns, audit,
+            reader_meta=self._reader_meta,
+            force_positional=self._force_positional,
+            tolerate_missing_schema=self._tolerate_missing,
+        ):
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(res["columns"][c], type=schema.field(c).type)
+                    for c in outs
+                ],
+                schema=schema,
+            )
+        self._drop_audit(audit)
+
+    def _drop_audit(self, audit) -> None:
+        if not self._audit_dir:
+            return
+        os.makedirs(self._audit_dir, exist_ok=True)
+        name = uuid.uuid4().hex
+        tmp = os.path.join(self._audit_dir, f".{name}.tmp")
+        with open(tmp, "w") as fh:
+            json.dump(audit, fh)
+        os.replace(tmp, os.path.join(self._audit_dir, f"{name}.json"))
+
+
+class OrcNativeSource(DataSource):
+    """`spark.read.format("orc_native")` backed by the pure-Python
+    stream decoder.
     The piece the other sources don't have: `pushFilters` (Spark 4.1
     Python DataSource pushdown API) translates Catalyst's typed
     Filters into the engine's SArg tree, and each per-file task runs
@@ -591,448 +837,39 @@ def _build_orc_native_class():
     pyspark.zip once per imported pyspark sub-package. That fixed
     per-call cost is the larger share; decoding is the smaller one, so
     a faster decoder moves a scan of this size little."""
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        EqualNullSafe,
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        In,
-        InputPartition,
-        IsNotNull,
-        IsNull,
-        LessThan,
-        LessThanOrEqual,
-        Not,
-    )
 
-    def _pa_type(types, cid, included=None):
-        """ORC type-tree node -> arrow type, recursively — the full
-        include-tree mapping (nested projection is P2, reference
-        `c++/include/orc/Reader.hh:260-281`; `mapred/OrcInputFormat.
-        parseInclude:61-88` resolves the same subtree closure). The
-        composite decoders already produce the matching Python
-        shapes: list -> list, struct -> field dict, map -> (k, v)
-        tuple list, union -> the engine's tagged-struct convention
-        {_tag, f0, f1, ...} (`stream_decode._UnionDecoder`). Unknown
-        future kinds raise, which excludes the column from the
-        default projection."""
-        import pyarrow as pa
+    @classmethod
+    def name(cls) -> str:
+        return "orc_native"
 
-        prim = {
-            "boolean": pa.bool_(), "tinyint": pa.int8(),
-            "smallint": pa.int16(), "int": pa.int32(),
-            "bigint": pa.int64(), "float": pa.float32(),
-            "double": pa.float64(), "date": pa.date32(),
-            "string": pa.string(), "char": pa.string(),
-            "varchar": pa.string(), "binary": pa.binary(),
-            "timestamp": pa.timestamp("us"),
-        }  # fmt: skip
-        t = types[cid]
-        k = t["kind"]
-        if k == "decimal":
-            # v0.11 files carry no precision/scale attributes;
-            # (38, 6) is the reference reader's default
-            p, s = t.get("precision"), t.get("scale")
-            return pa.decimal128(38 if p is None else p, 6 if s is None else s)
-        if k == "list":
-            return pa.list_(_pa_type(types, t["subtypes"][0], included))
-        if k == "map":
-            mk, mv = t["subtypes"]
-            return pa.map_(
-                _pa_type(types, mk, included), _pa_type(types, mv, included)
-            )
-        if k == "struct":
-            # include-pruned, matching the decoder's pruned field dicts
-            return pa.struct(
-                [
-                    (fn, _pa_type(types, sub, included))
-                    for fn, sub in zip(t["field_names"], t["subtypes"])
-                    if included is None or sub in included
-                ]
-            )
-        if k == "union":
-            return pa.struct(
-                [("_tag", pa.int8())]
-                + [
-                    (f"f{i}", _pa_type(types, sub, included))
-                    for i, sub in enumerate(t["subtypes"])
-                ]
-            )
-        if k in prim:
-            return prim[k]
-        raise ValueError(
-            f"orc_native: ORC kind {k!r} has no arrow mapping"
+    def _cached_meta(self):
+        if not hasattr(self, "_meta_cache"):
+            self._meta_cache = _first_meta(self.options)
+        return self._meta_cache
+
+    def schema(self) -> str:
+        from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
+            orc_schema_ddl,
         )
 
-    def _top_ids(meta):
-        """name -> column id for top-level columns — the shared
-        tools._column_ids (imported at call time: the package ships to
-        workers whole, so there is no pickling reason to duplicate the
-        _root convention here)."""
-        from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-            _column_ids,
+        first, meta = self._cached_meta()
+        cols = self.options.get("columns")
+        names = (
+            [c.strip() for c in cols.split(",")]
+            if cols
+            else _default_columns(meta)
         )
+        return orc_schema_ddl(first, names)
 
-        return _column_ids(meta)
-
-    def _default_columns(meta):
-        """columns option omitted: every top-level column whose type
-        tree the arrow exchange maps (since the nested mapping this
-        is everything except unknown future kinds)."""
-        cols = []
-        for name, cid in _top_ids(meta).items():
-            try:
-                _pa_type(meta["types"], cid)
-            except ValueError:
-                continue
-            cols.append(name)
-        if not cols:
-            kinds = [
-                meta["types"][cid]["kind"] for cid in _top_ids(meta).values()
-            ]
-            raise ValueError(
-                "orc_native: no arrow-mappable top-level columns "
-                f"(kinds: {kinds})"
-            )
-        return cols
-
-    def _norm_literal(v):
-        """Catalyst hands timestamp literals as TZ-AWARE datetimes
-        (session zone); the SArg stats domain is naive UTC (ORC-135
-        min_utc/max_utc), so rebase — otherwise every aware-vs-naive
-        comparison lands in the SargCastError keep-everything
-        fallback and timestamp PPD silently never prunes."""
-        import datetime as dt
-
-        if isinstance(v, dt.datetime) and v.tzinfo is not None:
-            return v.astimezone(dt.timezone.utc).replace(tzinfo=None)
-        return v
-
-    def _leaf(f):
-        """One Catalyst Filter -> SArg subtree, or None if this
-        filter cannot prune (it is still applied by Spark). Greater
-        comparisons compose as NOT(lessThan*) — the reference's own
-        builder has no greaterThan leaf (SearchArgumentImpl)."""
-        if isinstance(f, Not):
-            inner = _leaf(f.child)
-            return None if inner is None else ("not", inner)
-        attr = getattr(f, "attribute", None)
-        if not attr:
-            return None
-        # nested field references arrive as multi-part attributes —
-        # join to the engine's dotted-path form (every column id has
-        # its own ROW_INDEX/footer stats, so nested leaves prune like
-        # top-level ones; resolution in tools._resolve_dotted)
-        col = ".".join(attr)
-        if getattr(f, "value", False) is None:
-            return None  # null comparison literals never prune
-        if isinstance(f, EqualTo):
-            return ("equals", col, _norm_literal(f.value))
-        if isinstance(f, EqualNullSafe):
-            return ("null_safe_equals", col, _norm_literal(f.value))
-        if isinstance(f, LessThan):
-            return ("less_than", col, _norm_literal(f.value))
-        if isinstance(f, LessThanOrEqual):
-            return ("less_than_equals", col, _norm_literal(f.value))
-        if isinstance(f, GreaterThan):
-            return ("not", ("less_than_equals", col, _norm_literal(f.value)))
-        if isinstance(f, GreaterThanOrEqual):
-            return ("not", ("less_than", col, _norm_literal(f.value)))
-        if isinstance(f, In):
-            vals = [_norm_literal(v) for v in f.value if v is not None]
-            # a null IN literal can never match a non-null value and
-            # the SArg domain has no null literals (the reference
-            # builder rejects them) — drop nulls, and with nothing
-            # left the leaf cannot prune
-            return ("in", col, vals) if vals else None
-        if isinstance(f, IsNull):
-            return ("is_null", col, None)
-        if isinstance(f, IsNotNull):
-            return ("not", ("is_null", col, None))
-        return None  # String* etc.
-
-    def _first_meta(options):
-        """ONE driver-side glob + tail parse, shared by schema() and
-        the reader (the arrow schema and default columns are constant
-        across the lake and pickled to every task)."""
-        import glob
-        import os
-
-        from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
-            parse_tail_of_file,
-        )
-
-        path = options.get("path")
-        if not path:
-            raise ValueError(
-                "orc_native requires .option('path', <orc dir>)"
-            )
-        files = sorted(glob.glob(os.path.join(path, "*.orc")))
-        if not files:
-            raise FileNotFoundError(f"no .orc files under {path}")
-        if _use_side_file(options):
-            files = [_bounded_view(f) for f in files]
-        # evolved lakes (C1): the READER schema is ELECTED — the file
-        # whose schema is a widening-supertype of every other file's
-        # (r11 verdict #2: no caller hint; a lake whose oldest file
-        # predates an added column reads with no option set). The
-        # explicit schema_file option still overrides (a caller with a
-        # catalog skips the tail sweep). DataSource planning is
-        # driver-side by contract, so the election loop is too — one
-        # ranged tail read per file, deduped by schema signature
-        # (evolution_native.elect_reader_path).
-        first = options.get("schema_file")
-        if first:
-            return first, parse_tail_of_file(first)
-        from orc_release_hdp_2_6_5_99_1_tag_spark.sources.evolution_native import (
-            elect_reader_path,
-        )
-
-        # election cache ACROSS loads (r12 ADVICE): every .load() makes
-        # a fresh DataSource instance, so the per-instance memo alone
-        # re-runs the O(files) tail sweep per plan. The fingerprint is
-        # a fixed-size DIGEST over the file list + (mtime, size) per
-        # file — any append/compaction/rewrite changes it and
-        # re-elects; an unchanged lake costs one stat() per file
-        # instead of one ranged READ per file, and the retained cache
-        # entry stays O(1) per lake, not O(files).
-        import hashlib
-
-        force = _force_positional(options)
-        h = hashlib.sha256()
-        for f in files:
-            st = os.stat(f)
-            h.update(f"{f}\x00{st.st_mtime_ns}\x00{st.st_size}\x00".encode())
-        fp = h.hexdigest()
-        cached = _ELECTION_CACHE.get((path, force))
-        if cached is not None and cached[0] == fp:
-            return cached[1]
-        elected = elect_reader_path(files, force_positional=force)
-        _ELECTION_CACHE[(path, force)] = (fp, elected)
-        return elected
-
-    def _force_positional(options) -> bool:
-        """The reference's `orc.force.positional.evolution`
-        (`OrcConf.java:141-145`): reconcile file columns with the
-        reader's by INDEX even when the file carries real names
-        (Hive 2.1 compatibility)."""
-        return str(options.get("force_positional", "")).lower() in (
-            "1", "true", "yes",
-        )
-
-    def _use_side_file(options) -> bool:
-        """`.option("use_side_file", "true")`: readable-while-writing —
-        each file with a `<name>.flush_length` side file is read AS IF
-        it ended at that committed length (the reference's
-        `OrcConf.MAX_FILE_LENGTH:118-121` / `_flush_length` protocol,
-        honored at `ReaderImpl.extractFileTail:515`), so a lake that
-        contains a GROWING appender file (NativeOrcAppender, or any
-        writer publishing intermediate footers) scans its durable
-        prefix and never the torn bytes past it."""
-        return str(options.get("use_side_file", "")).lower() in (
-            "1", "true", "yes",
-        )
-
-    def _bounded_view(path: str):
-        """The committed [0, flush_length) byte view of a growing
-        file, as a real file the unmodified scan chain reads (the s23
-        materialize-the-prefix discipline, kept out of the shared
-        decode path by design). Cached per (file, bound) — a new
-        publish is a new bound, so repeated polls of an unchanged
-        bound cost one stat; stale bounds of the same file are
-        removed. Files without a side file pass through untouched."""
-        import hashlib
-        import os
-        import shutil
-        import tempfile
-
-        side = path + ".flush_length"
-        if not os.path.exists(side):
-            return path
-        with open(side) as fh:
-            bound = int(fh.read().strip())
-        if bound >= os.path.getsize(path):
-            return path
-        tag = hashlib.sha256(os.path.abspath(path).encode()).hexdigest()[:16]
-        views = os.path.join(tempfile.gettempdir(), "orc_native_views")
-        os.makedirs(views, exist_ok=True)
-        view = os.path.join(views, f"{tag}-{bound}.orc")
-        if not os.path.exists(view):
-            for stale in os.listdir(views):
-                if stale.startswith(f"{tag}-"):
-                    try:
-                        os.remove(os.path.join(views, stale))
-                    except OSError:
-                        pass
-            tmp = view + ".tmp"
-            with open(path, "rb") as src, open(tmp, "wb") as dst:
-                remaining = bound
-                while remaining > 0:
-                    chunk = src.read(min(1 << 20, remaining))
-                    if not chunk:
-                        break
-                    dst.write(chunk)
-                    remaining -= len(chunk)
-            os.replace(tmp, view)
-        return view
-
-    class OrcNativeReader(DataSourceReader):
-        def __init__(self, options: dict, first=None, meta=None):
-            self._path = options["path"]
-            if meta is None:
-                first, meta = _first_meta(options)
-            cols = options.get("columns")
-            if cols:
-                self._columns = [c.strip() for c in cols.split(",")]
-            else:
-                self._columns = _default_columns(meta)
-            self._audit_dir = options.get("audit_dir")
-            self._force_positional = _force_positional(options)
-            self._use_side = _use_side_file(options)
-            # orc.tolerate.missing.schema parity (OrcConf.java:85-89,
-            # default true): strict mode refuses best-effort positional
-            # reconciliation of pre-HIVE-4243 files at scan time
-            self._tolerate_missing = str(
-                options.get("tolerate_missing_schema", "true")
-            ).lower() not in ("0", "false", "no")
-            self._tree = None  # set by pushFilters
-            self._schema = self._arrow_schema(meta)
-            # the elected reader schema's tail parse ships to every
-            # task: field-level NULL-fill and widening conversions in
-            # scan_file_evolved key off it (evolution_native)
-            self._reader_meta = meta
-
-        def pushFilters(self, filters):
-            leaves = []
-            for f in filters:
-                leaf = _leaf(f)
-                if leaf is not None:
-                    leaves.append(leaf)
-                # yield EVERYTHING back: pruning is partial pushdown
-                yield f
-            if len(leaves) == 1:
-                self._tree = leaves[0]
-            elif leaves:
-                self._tree = ("and", *leaves)
-
-        def partitions(self):
-            import glob
-            import os
-
-            files = sorted(glob.glob(os.path.join(self._path, "*.orc")))
-            if not files:
-                raise FileNotFoundError(f"no .orc files under {self._path}")
-            if self._use_side:
-                # bounded views are built DRIVER-side (partition
-                # planning), so tasks scan plain complete files
-                files = [_bounded_view(f) for f in files]
-            return [InputPartition(f) for f in files]
-
-        def _arrow_schema(self, meta):
-            import pyarrow as pa
-
-            from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-                _included_ids,
-                output_columns,
-            )
-
-            ids = _top_ids(meta)
-            # dotted sub-paths (nested projection P2): the schema is
-            # the PRUNED struct per top-level name; _included_ids
-            # raises the clear unknown-column/field error
-            included = _included_ids(meta, self._columns)
-            fields = []
-            for c in output_columns(self._columns, meta):
-                fields.append((c, _pa_type(meta["types"], ids[c], included)))
-            return pa.schema(fields)
-
-        def read(self, partition):
-            import os
-
-            import pyarrow as pa
-
-            from orc_release_hdp_2_6_5_99_1_tag_spark.sources import (
-                stream_decode as m,
-            )
-
-            path = partition.value
-            audit = {"file": os.path.basename(path)}
-            schema = self._schema
-            # the arrow schema's field names ARE the output names
-            # (exact-match-aware; built once on the driver)
-            outs = schema.names
-            for res in m.scan_file_evolved(
-                path, self._tree, self._columns, audit,
-                reader_meta=self._reader_meta,
-                force_positional=self._force_positional,
-                tolerate_missing_schema=self._tolerate_missing,
-            ):
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(res["columns"][c], type=schema.field(c).type)
-                        for c in outs
-                    ],
-                    schema=schema,
-                )
-            self._drop_audit(audit)
-
-        def _drop_audit(self, audit) -> None:
-            if not self._audit_dir:
-                return
-            import json
-            import os
-            import uuid
-
-            os.makedirs(self._audit_dir, exist_ok=True)
-            name = uuid.uuid4().hex
-            tmp = os.path.join(self._audit_dir, f".{name}.tmp")
-            with open(tmp, "w") as fh:
-                json.dump(audit, fh)
-            os.replace(tmp, os.path.join(self._audit_dir, f"{name}.json"))
-
-    class OrcNativeSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "orc_native"
-
-        def _cached_meta(self):
-            if not hasattr(self, "_meta_cache"):
-                self._meta_cache = _first_meta(self.options)
-            return self._meta_cache
-
-        def schema(self) -> str:
-            from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
-                orc_schema_ddl,
-            )
-
-            first, meta = self._cached_meta()
-            cols = self.options.get("columns")
-            names = (
-                [c.strip() for c in cols.split(",")]
-                if cols
-                else _default_columns(meta)
-            )
-            return orc_schema_ddl(first, names)
-
-        def reader(self, schema) -> OrcNativeReader:
-            first, meta = self._cached_meta()
-            return OrcNativeReader(self.options, first=first, meta=meta)
-
-    return OrcNativeSource
+    def reader(self, schema) -> OrcNativeReader:
+        first, meta = self._cached_meta()
+        return OrcNativeReader(self.options, first=first, meta=meta)
 
 
 def register_orc_native(spark) -> None:
-    """Idempotent: ships the whole engine package (the decode chain
-    spans footer_tail/tools/truth/bloom, so the flat single-module
-    trick does not cover it), enables the Python-source filter
+    """Idempotent: ships the engine, enables the Python-source filter
     pushdown conf (off by default in Spark 4.1), and registers the
-    by-value-pickled class."""
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
-        _ship_package,
-    )
-
-    _ship_package(spark)
+    DataSource."""
+    ship_engine(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(_build_orc_native_class())
+    spark.dataSource.register(OrcNativeSource)

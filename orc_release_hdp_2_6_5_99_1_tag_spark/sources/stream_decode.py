@@ -54,8 +54,9 @@ cluster-wide parallelism while the driver never touches data bytes.
 from __future__ import annotations
 
 import struct
-from typing import Any
+from typing import Any, NamedTuple
 
+from orc_release_hdp_2_6_5_99_1_tag_spark.session import ship_engine
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
     _decompress_chunk,
     get_index_position,
@@ -1116,42 +1117,6 @@ def decode_stripe(
     }
 
 
-def _ship_package(spark) -> None:
-    """Ship the whole engine package to the workers as one zip (an
-    addPyFile re-add of the same path is a no-op, and the zip is
-    cached until any source file changes). decode_stripe runs PER
-    TASK (the plan itself ships in the closure — see read_planned),
-    so workers need the package importable by its real name — the
-    flat single-module trick pyds/footer_stats use doesn't cover a
-    module graph."""
-    import os
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg_name = os.path.basename(pkg_dir)
-    newest = 0.0
-    sources = []
-    for root, _dirs, files in os.walk(pkg_dir):
-        for f in files:
-            if f.endswith(".py"):
-                full = os.path.join(root, f)
-                sources.append(full)
-                newest = max(newest, os.path.getmtime(full))
-    import tempfile
-
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"{pkg_name}-{int(newest)}.zip"
-    )
-    if not os.path.exists(zip_path):
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for full in sources:
-                rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                zf.write(full, rel)
-        os.replace(tmp, zip_path)
-    spark.sparkContext.addPyFile(zip_path)
-
-
 def keep_all_picks(path: str) -> list[list[dict]]:
     """pickRowGroups-shaped keep-everything decisions (one entry per
     row group per stripe, from the root column's row index) — the
@@ -1367,6 +1332,73 @@ def scan_file(path: str, tree: Any, columns: list[str],
         yield res
 
 
+class _FileMapping(NamedTuple):
+    """How one file of a lake reads under the reader schema (see
+    `_map_file`)."""
+
+    pos_levels: int  # positional levels consumed (0: names match)
+    pos_map: dict  # reader top-level name -> this file's name
+    tree: Any  # the predicate in the file's namespace; None = keep all
+    present: list  # requested reader paths whose top column this file has
+    file_cols: list  # `present`, translated into the file's namespace
+
+    def to_file(self, c: str) -> str:
+        from orc_release_hdp_2_6_5_99_1_tag_spark.sources.evolution_native import (
+            rename_path,
+        )
+
+        return rename_path(c, self.pos_map) if self.pos_map else c
+
+
+def _map_file(meta: dict, reader_meta: dict | None, tree: Any,
+              columns: list[str], force_positional: bool = False) -> _FileMapping:
+    """The per-file reconciliation `scan_file_evolved` scans with and
+    `explain_lake_scan` reports on — one copy, so the diagnostic
+    cannot drift from the scan.
+
+    Pre-HIVE-4243 files (_col<N> names) reconcile by POSITION — one
+    level deep for plain files, TWO for ACID files (the event wrapper
+    plus the `row` struct; the missing-names check runs on the base
+    row: SchemaEvolution.java:93-113, buildConversion:398-424).
+    `force_positional` (orc.force.positional.evolution,
+    OrcConf.java:141-145 — Hive 2.1 compat) applies the same pairing
+    even when the file carries real names. Reader paths translate into
+    the file's namespace for the scan. A predicate this file cannot
+    prune — a missing/unresolvable column (all-NULL domain here) or a
+    PPD-unsafe conversion — maps to None: keep all, exact via the
+    caller's residual filter."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import (
+        evolution_native as evo,
+    )
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
+        _column_ids,
+        _top_name,
+    )
+
+    ref = reader_meta if reader_meta is not None else meta
+    pos_levels = 0
+    pos_map: dict[str, str] = {}
+    if reader_meta is not None and not evo.is_positional(reader_meta):
+        pos_levels = evo.positional_levels(meta, force=force_positional)
+    if pos_levels:
+        pos_map = evo.positional_name_map(reader_meta, meta, levels=pos_levels)
+    eff_tree = tree
+    if tree is not None and not evo.tree_prunable(
+        meta, ref, tree, file_names=pos_map or None
+    ):
+        eff_tree = None
+    if eff_tree is not None and pos_map:
+        eff_tree = evo.tree_rename(eff_tree, pos_map)
+    fids = _column_ids(meta)
+    present, file_cols = [], []
+    for c in columns:
+        fc = evo.rename_path(c, pos_map) if pos_map else c
+        if _top_name(fids, fc) in fids:
+            present.append(c)
+            file_cols.append(fc)
+    return _FileMapping(pos_levels, pos_map, eff_tree, present, file_cols)
+
+
 def scan_file_evolved(path: str, tree: Any, columns: list[str],
                       audit: dict | None = None,
                       reader_meta: dict | None = None,
@@ -1418,14 +1450,6 @@ def scan_file_evolved(path: str, tree: Any, columns: list[str],
     fids = _column_ids(meta)
     ref = reader_meta if reader_meta is not None else meta
     outs = output_columns(columns, ref)
-    # pre-HIVE-4243 files (_col<N> names) reconcile by POSITION —
-    # one level deep for plain files, TWO for ACID files (the event
-    # wrapper plus the `row` struct; the missing-names check runs on
-    # the base row: SchemaEvolution.java:93-113, buildConversion:
-    # 398-424). `force_positional` (orc.force.positional.evolution,
-    # OrcConf.java:141-145 — Hive 2.1 compat) applies the same pairing
-    # even when the file carries real names. Reader paths translate
-    # into the file's namespace for the scan and back for the output.
     # orc.tolerate.missing.schema (OrcConf.java:85-89, default TRUE):
     # with tolerance OFF, a missing-names FILE whose schema differs
     # from the reader's must fail loudly instead of best-effort
@@ -1445,58 +1469,38 @@ def scan_file_evolved(path: str, tree: Any, columns: list[str],
             "writer) and tolerate_missing_schema=False — will not "
             "reconcile schemas by position"
         )
-    pos_levels = 0
-    pos_map: dict[str, str] = {}
-    if reader_meta is not None and not evo.is_positional(reader_meta):
-        pos_levels = evo.positional_levels(meta, force=force_positional)
-    if pos_levels:
-        pos_map = evo.positional_name_map(reader_meta, meta, levels=pos_levels)
-        if audit is not None:
-            audit["evolution_positional"] = pos_levels
-    to_file = (lambda c: evo.rename_path(c, pos_map)) if pos_map else (lambda c: c)
-    present: list[str] = []   # reader-side paths present in this file
-    for c in columns:
-        fc = to_file(c)
-        if _top_name(fids, fc) not in fids:
-            continue  # whole top-level column missing: NULL-fill below
-        chain, full = _resolve_partial(meta, fc)
-        if not full and reader_meta is None:
-            t = meta["types"][chain[-1]]
-            raise KeyError(
-                f"{c!r}: struct has fields {t['field_names']} — "
-                "field-level evolution needs an elected reader schema "
-                "(pass reader_meta)"
-            )
-        present.append(c)
+    fm = _map_file(meta, reader_meta, tree, columns, force_positional)
+    pos_levels, pos_map, to_file = fm.pos_levels, fm.pos_map, fm.to_file
+    if pos_levels and audit is not None:
+        audit["evolution_positional"] = pos_levels
+    if reader_meta is None:
+        for c in fm.present:
+            chain, full = _resolve_partial(meta, to_file(c))
+            if not full:
+                t = meta["types"][chain[-1]]
+                raise KeyError(
+                    f"{c!r}: struct has fields {t['field_names']} — "
+                    "field-level evolution needs an elected reader schema "
+                    "(pass reader_meta)"
+                )
     missing = [
         o for o in outs if _top_name(fids, to_file(o)) not in fids
     ]
-    if not present:
+    if not fm.present:
         raise ValueError(
             f"{path}: none of the requested columns {outs} exist in "
             f"this file (has {sorted(fids)}) — not an evolution of the "
             "reader schema"
         )
-    eff_tree = tree
-    if tree is not None and not evo.tree_prunable(
-        meta, ref, tree, file_names=pos_map or None
-    ):
-        # cannot prune: missing/unresolvable predicate column (all-NULL
-        # domain here) or a PPD-unsafe conversion — keep all, exact via
-        # the caller's residual filter
-        eff_tree = None
-        if audit is not None:
-            audit["evolution_keep_all"] = True
-    if eff_tree is not None and pos_map:
-        eff_tree = evo.tree_rename(eff_tree, pos_map)
-    file_req = [to_file(c) for c in present]
+    if tree is not None and fm.tree is None and audit is not None:
+        audit["evolution_keep_all"] = True
     # per-column value fixups (struct-field NULL-fill, decimal
     # rescale); None for the identity fast path
     convs = {}
     if reader_meta is not None:
         rids = _column_ids(reader_meta)
         r_inc = _included_ids(reader_meta, columns)
-        f_inc = _included_ids(meta, file_req, partial=True)
+        f_inc = _included_ids(meta, fm.file_cols, partial=True)
         for o in outs:
             fo = to_file(o)
             if _top_name(fids, fo) in fids and o in rids:
@@ -1514,7 +1518,7 @@ def scan_file_evolved(path: str, tree: Any, columns: list[str],
     if convs and audit is not None:
         audit["evolution_converted"] = sorted(convs)
     # reuse the tail parse above — one metadata read per file, not two
-    for res in scan_file(path, eff_tree, file_req, audit, meta=meta,
+    for res in scan_file(path, fm.tree, fm.file_cols, audit, meta=meta,
                          partial=reader_meta is not None):
         if pos_map:
             # decode keys are the file's _col names — surface the
@@ -1566,7 +1570,7 @@ def read_planned_lake(spark, paths: list[str], tree: Any, columns: list[str],
 
     if not paths:
         raise ValueError("read_planned_lake: empty file list")
-    _ship_package(spark)
+    ship_engine(spark)
     # reader schema ELECTION (r11 verdict #2 — no caller hint): the
     # file whose schema is a widening-supertype of every other file's
     # becomes the reader schema; every other file reads through the
@@ -1625,8 +1629,8 @@ def explain_lake_scan(paths: list[str], tree: Any, columns: list[str],
     file under `force_positional`) gets the reader predicate and
     columns TRANSLATED into its own namespace first — so the
     diagnostic reports the pruning the scan actually does instead of
-    a false keep-all (r12 ADVICE: this function used to skip the
-    positional map that scan_file_evolved applies)."""
+    a false keep-all. The per-file mapping is `_map_file`, the same
+    one scan_file_evolved scans with."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import (
         pick_row_groups,
     )
@@ -1634,11 +1638,7 @@ def explain_lake_scan(paths: list[str], tree: Any, columns: list[str],
         evolution_native as evo,
     )
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-        _top_name,
         plan_read_ranges,
-    )
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-        _column_ids,
     )
 
     reader_meta = None
@@ -1649,28 +1649,8 @@ def explain_lake_scan(paths: list[str], tree: Any, columns: list[str],
     out = []
     for path in paths:
         meta = parse_tail_of_file(path)
-        ref = reader_meta if reader_meta is not None else meta
-        # mirror scan_file_evolved's positional reconciliation
-        pos_map: dict[str, str] = {}
-        if reader_meta is not None and not evo.is_positional(reader_meta):
-            lv = evo.positional_levels(meta, force=force_positional)
-            if lv:
-                pos_map = evo.positional_name_map(ref, meta, levels=lv)
-        to_file = (
-            (lambda c: evo.rename_path(c, pos_map)) if pos_map else (lambda c: c)
-        )
-        eff_tree = tree
-        if tree is not None and not evo.tree_prunable(
-            meta, ref, tree, file_names=pos_map or None
-        ):
-            eff_tree = None
-        if eff_tree is not None and pos_map:
-            eff_tree = evo.tree_rename(eff_tree, pos_map)
-        fids = _column_ids(meta)
-        file_cols = [
-            fc for fc in (to_file(c) for c in columns)
-            if _top_name(fids, fc) in fids
-        ]
+        fm = _map_file(meta, reader_meta, tree, columns, force_positional)
+        eff_tree = fm.tree
         if eff_tree is None:
             d = {"path": path, "truth": "YES_NO_NULL", "keep": True}
         else:
@@ -1682,7 +1662,7 @@ def explain_lake_scan(paths: list[str], tree: Any, columns: list[str],
                 else keep_all_picks(path)
             )
             plan = plan_read_ranges(
-                path, eff_tree, columns=file_cols, picks=picks, partial=True
+                path, eff_tree, columns=fm.file_cols, picks=picks, partial=True
             )
             d["stripes_total"] = len(picks)
             d["stripes_kept"] = sum(
@@ -1729,7 +1709,7 @@ def read_planned(spark, path: str, tree: Any, columns: list[str]):
         output_columns,
     )
 
-    _ship_package(spark)
+    ship_engine(spark)
     outs = output_columns(columns, parse_tail_of_file(path))
     picks = pick_row_groups(path, tree)
     plan = plan_read_ranges(path, tree, columns=columns, picks=picks)

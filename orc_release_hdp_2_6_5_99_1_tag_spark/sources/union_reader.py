@@ -37,6 +37,8 @@ import pyarrow.compute as pc
 import pyarrow.orc as pa_orc
 from pyspark.sql import DataFrame, SparkSession
 
+from orc_release_hdp_2_6_5_99_1_tag_spark.session import ship_engine
+
 
 def _tagged_type(t: pa.DataType) -> pa.DataType:
     """Map an arrow type to its Spark-compatible shim type."""
@@ -146,6 +148,7 @@ def read_orc_tagged(spark: SparkSession, path: str) -> DataFrame:
     if not spark_schema.fields:
         return spark.range(0).select()
 
+    ship_engine(spark)  # decode() calls this module's _convert_array
     paths = spark.createDataFrame([(f,) for f in files], "path string").repartition(
         len(files)
     )

@@ -15,9 +15,10 @@ STRUCTURE changes. Tiny dimension tables (< 10k rows) are copied as
 one file/one row group: splitting 25-row nation.parquet would only add
 per-file open overhead.
 
-Usage:
-    python scripts/make_mrg_fixture.py [--out /root/repo/.scratch/fixtures/mrg0.1]
-    SPARK_GRAFT_SF_DIR=/root/repo/.scratch/fixtures/mrg0.1 \
+Usage (the default --out is `.scratch/fixtures/mrg0.1` in the checkout
+that holds this script):
+    python scripts/make_mrg_fixture.py [--out <dir>]
+    SPARK_GRAFT_SF_DIR=<checkout>/.scratch/fixtures/mrg0.1 \
         SPARK_GRAFT_CPUS=8 python scripts/opt_profile.py --headline
 """
 
@@ -27,7 +28,8 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from orc_release_hdp_2_6_5_99_1_tag_spark.tables import TABLE_NAMES
 
@@ -39,7 +41,9 @@ def main() -> None:
     import pyarrow.parquet as pq
 
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="/root/repo/.scratch/fixtures/mrg0.1")
+    ap.add_argument(
+        "--out", default=os.path.join(REPO, ".scratch", "fixtures", "mrg0.1")
+    )
     ap.add_argument("--files", type=int, default=4)
     ap.add_argument("--row-groups-per-file", type=int, default=4)
     args = ap.parse_args()

@@ -1180,7 +1180,13 @@ def test_explain_lake_scan_positional_translation(positional_lake):
 def test_election_cache_across_loads(spark, positional_lake, monkeypatch):
     """r12 ADVICE: the orc_native election runs ONCE per (path,
     fingerprint) across loads — a second plan over an unchanged lake
-    must not repeat the O(files) tail sweep."""
+    must not repeat the O(files) tail sweep. The class is pickled once,
+    as `spark.dataSource.register` does, and each load unpickles those
+    bytes, as every planner call of a reused Python worker does: a
+    class pickled by value would unpickle with a fresh copy of the
+    module globals and re-elect on every load."""
+    from pyspark import cloudpickle
+
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources import pyds
 
     calls = {"n": 0}
@@ -1190,12 +1196,16 @@ def test_election_cache_across_loads(spark, positional_lake, monkeypatch):
         calls["n"] += 1
         return real(*a, **k)
 
+    payload = cloudpickle.dumps(pyds.OrcNativeSource)
+
+    def shipped():
+        return cloudpickle.loads(payload)
+
     monkeypatch.setattr(evo, "elect_reader_path", counting)
     pyds._ELECTION_CACHE.clear()
-    cls = pyds._build_orc_native_class()
     lake_dir = os.path.dirname(positional_lake["old"])
     for _ in range(2):
-        src = cls(options={"path": lake_dir})
+        src = shipped()(options={"path": lake_dir})
         assert "bigint" in src.schema()
     assert calls["n"] == 1
     # a changed lake re-elects
@@ -1203,7 +1213,7 @@ def test_election_cache_across_loads(spark, positional_lake, monkeypatch):
 
     shutil.copy(positional_lake["new"], os.path.join(lake_dir, "c_copy.orc"))
     try:
-        src = cls(options={"path": lake_dir})
+        src = shipped()(options={"path": lake_dir})
         src.schema()
         assert calls["n"] == 2
     finally:

@@ -221,11 +221,10 @@ def test_stream_source_replay_range_matches_read(spark):
     offset range."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.pyds import (
         SYNTH_BATCH,
-        _build_stream_source_class,
+        SyntheticEventsSource,
     )
 
-    src_cls = _build_stream_source_class()
-    reader = src_cls(options={}).simpleStreamReader(None)
+    reader = SyntheticEventsSource(options={}).simpleStreamReader(None)
 
     def rows(batches):
         # the source emits Arrow RecordBatches (round-10 change);
